@@ -24,6 +24,7 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from . import index_meta
 from .materialize import materialize as _materialize
 from .text import ngrams_from_words
 
@@ -507,7 +508,8 @@ _BAND_INDEX_META = "_band_index_meta.json"
 def _recover_precompact(spark, path: str) -> bool:
     """Finish a :func:`compact_index` that crashed between its two
     renames: canonical path absent, the only full copy parked at
-    ``<path>.precompact``. Every index entry point (ensure/check meta)
+    ``<path>.precompact``. Every sidecar access (``index_meta.read`` and
+    ``index_meta.ensure``, so every probe, append and stream wiring)
     runs this FIRST — without it, a stream restart's sidecar write
     recreates the canonical dir with only the sidecar, the probe
     bootstraps as an empty corpus (silently missing all cross-corpus
@@ -529,68 +531,40 @@ def _recover_precompact(spark, path: str) -> bool:
     return False
 
 
-def _write_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
-    """Parameter sidecar (leading-underscore name — Parquet readers skip
-    it). Written through the Hadoop FS API (`fsutil`) so HDFS/S3 index
-    paths work identically to local ones; temp+rename so a crash can't
-    leave truncated JSON blocking every future reader."""
-    import json as _json
+def _band_meta(n: int, num_hashes: int, bands: int) -> dict:
+    return {"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}
 
-    from .. import fsutil
 
-    fsutil.write_text_atomic(
-        spark,
-        f"{path}/{_BAND_INDEX_META}",
-        _json.dumps({"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}),
+def _check_meta(path: str, want: dict, meta: dict) -> None:
+    """Sidecar validator for the band, SimHash and exact indexes, whose
+    sidecar is fully determined by the call's parameters: anything but
+    equality raises. A mismatched shingle width, hash, band or block
+    count silently yields wrong buckets (the same footgun
+    ivf_index_append's centroid digest guards against), and an exact
+    probe pointed at another family's index would join garbage keys."""
+    if meta == want:
+        return
+    if want["kind"] == "exact_md5":  # no parameters: only the kind differs
+        raise ValueError(
+            f"index at {path} is {meta}, not an exact_md5 digest index"
+        )
+    raise ValueError(
+        f"{want['kind']} index at {path} was built with {meta}, used with "
+        f"{want} — mismatched parameters would corrupt every result"
     )
 
 
-def _check_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
-    """Refuse to probe or append with parameters other than the ones the
-    index was built with — a mismatched shingle width, hash count, or
-    band count silently yields wrong buckets (the same footgun
-    ivf_index_append's centroid digest guards against)."""
-    import json as _json
-
-    from .. import fsutil
-
-    _recover_precompact(spark, path)
-    try:
-        meta = _json.loads(fsutil.read_text(spark, f"{path}/{_BAND_INDEX_META}"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"no {_BAND_INDEX_META} sidecar at {path}: index was not "
-            "written by minhash_index_write/near_dedup_stream, cannot "
-            "validate probe parameters"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_BAND_INDEX_META} sidecar at {path} is corrupt ({e}): "
-            "likely a crash mid-write by an older writer — rebuild the "
-            "index (minhash_index_write) or restore the sidecar by hand"
-        ) from None
-    want = {"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}
-    if meta != want:
-        raise ValueError(
-            f"band index at {path} was built with {meta}, used with "
-            f"{want} — mismatched parameters would corrupt every result"
-        )
+def _require_meta(spark, path: str, name: str, want: dict) -> None:
+    """Refuse to probe or append unless the sidecar ``name`` matches."""
+    _check_meta(path, want, index_meta.read(spark, path, name))
 
 
-def _ensure_band_index_meta(spark, path: str, n: int, num_hashes: int, bands: int) -> None:
-    """Write the sidecar iff absent; otherwise VALIDATE against it.
-    The wiring-time call in ``near_dedup_stream`` must not blindly
-    rewrite: a stream restarted with drifted parameters (bands=4 over a
-    bands=8 index) would stamp the new parameters over the old sidecar
-    and turn the mismatch guard into a rubber stamp — every probe then
-    joins incompatible bucket spaces silently (review find)."""
-    from .. import fsutil
-
-    _recover_precompact(spark, path)
-    if fsutil.exists(spark, f"{path}/{_BAND_INDEX_META}"):
-        _check_band_index_meta(spark, path, n, num_hashes, bands)
-    else:
-        _write_band_index_meta(spark, path, n, num_hashes, bands)
+def _ensure_meta(spark, path: str, name: str, want: dict) -> None:
+    """The stream-wiring form: write the sidecar iff absent, otherwise
+    validate it (``index_meta.ensure``)."""
+    index_meta.ensure(
+        spark, path, name, want, lambda meta: _check_meta(path, want, meta)
+    )
 
 
 def minhash_index_write(
@@ -612,7 +586,9 @@ def minhash_index_write(
     minhash_band_rows(df, text_col, id_col, n, num_hashes, bands).write.mode(
         "overwrite"
     ).partitionBy("band").parquet(path)
-    _write_band_index_meta(df.sparkSession, path, n, num_hashes, bands)
+    index_meta.write(
+        df.sparkSession, path, _BAND_INDEX_META, _band_meta(n, num_hashes, bands)
+    )
 
 
 def minhash_index_append(
@@ -636,7 +612,9 @@ def minhash_index_append(
     operation (run :func:`compact_index` over the small files on
     whatever cadence the scan profile needs, exactly like any
     log-structured table)."""
-    _check_band_index_meta(df.sparkSession, path, n, num_hashes, bands)
+    _require_meta(
+        df.sparkSession, path, _BAND_INDEX_META, _band_meta(n, num_hashes, bands)
+    )
     minhash_band_rows(df, text_col, id_col, n, num_hashes, bands).write.mode(
         "append"
     ).partitionBy("band").parquet(path)
@@ -809,160 +787,6 @@ def fold_pairs_gens(spark, path: str, current_batch: int) -> list[int]:
     return sorted(live)
 
 
-def migrate_pairs_layout(spark, path: str) -> list[int]:
-    """One-time upgrade of a pre-r12 pairs log (``batch=<k>`` partition
-    dirs, batch encoded ONLY in the dir name) to the generational
-    layout (``gen=b<k>`` dirs with ``batch`` as a data column). Without
-    this, a mixed root fails Spark partition discovery outright
-    ('Conflicting partition column names': batch vs gen) and the
-    replay-hygiene sweep (:func:`drop_stale_pair_gens`) would never
-    match the old names.
-
-    Called from the stream's per-batch preamble (a no-op listing in
-    steady state). Each legacy dir is rewritten with its ``batch``
-    value materialized as a column into a dot-prefixed tmp (invisible
-    to discovery), renamed to ``gen=b<k>``, then the legacy dir is
-    deleted — the same crash protocol as :func:`fold_pairs_gens`. A
-    crash between rename and source-delete leaves both dirs; this runs
-    BEFORE any new-era write, so a coexisting ``gen=b<k>`` proves the
-    migration of ``batch=<k>`` already completed and the legacy dir is
-    simply deleted on resume. Returns the migrated batch ids."""
-    from .. import fsutil
-
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    legacy: list[int] = []
-    names = {st.getPath().getName() for st in fs.listStatus(jpath)}
-    for name in names:
-        if name.startswith("batch="):
-            try:
-                legacy.append(int(name[len("batch="):]))
-            except ValueError:
-                continue
-    if not legacy:
-        return []
-    _LOG.warning(
-        "migrate_pairs_layout(%s): upgrading legacy batch= dirs %s to "
-        "the generational gen=b<k> layout",
-        path, sorted(legacy),
-    )
-    for k in sorted(legacy):
-        src = f"{path}/batch={k}"
-        dst = f"{path}/gen=b{k}"
-        if f"gen=b{k}" in names:
-            # rename completed in a previous (crashed) migration; only
-            # the source-delete is outstanding
-            fsutil.delete(spark, src)
-            continue
-        tmp = f"{path}/.compact.gen=b{k}"
-        fsutil.delete(spark, tmp)
-        from pyspark.sql import functions as F  # local: keep module top light
-
-        # batch must be written with the SAME physical type the stream's
-        # new-era gens use (F.lit(batch_id) -> INT32): a root mixing
-        # INT32 and INT64 footers for one column fails reads with
-        # PARQUET_COLUMN_DATA_TYPE_MISMATCH whenever the int-typed
-        # footer wins schema inference — recreating the mixed-root
-        # failure this migration exists to prevent (r12 advisor find,
-        # pinned by test_migrated_and_native_gens_fold_and_read).
-        spark.read.parquet(src).withColumn(
-            "batch", F.lit(k).cast("int")
-        ).coalesce(1).write.parquet(tmp)
-        if not fsutil.rename(spark, tmp, dst):
-            raise IOError(
-                f"pairs migration: rename {tmp} -> {dst} failed; legacy "
-                "dir left untouched"
-            )
-        fsutil.delete(spark, src)
-    return sorted(legacy)
-
-
-def _recover_pair_repairs(spark, path: str) -> None:
-    """Finish :func:`repair_pairs_batch_types` swaps that crashed
-    mid-rename: a ``.prerepair.gen=<x>`` backup without its canonical
-    dir IS that generation — rename it back; with the canonical present
-    it is provably stale — delete it. Leftover ``.repair.gen=<x>`` tmp
-    dirs are always incomplete writes and are removed. Same protocol as
-    :func:`_recover_pair_dir_swaps`."""
-    from .. import fsutil
-
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if name.startswith(".repair.gen="):
-            fs.delete(status.getPath(), True)
-        elif name.startswith(".prerepair.gen="):
-            canon = f"{path}/{name[len('.prerepair.'):]}"
-            if fsutil.exists(spark, canon):
-                fs.delete(status.getPath(), True)
-            elif not fsutil.rename(spark, f"{path}/{name}", canon):
-                raise IOError(
-                    f"pairs repair recovery rename {name} failed; "
-                    "generation left at the backup path"
-                )
-
-
-def repair_pairs_batch_types(spark, path: str) -> list[str]:
-    """One-time repair of generational pairs dirs whose FILES carry the
-    ``batch`` column as INT64 — the r12 migration wrote migrated gens
-    with ``.cast('long')`` while the stream's native gens write INT32,
-    so a root migrated by that code mixes parquet physical types for
-    one column and fails reads with PARQUET_COLUMN_DATA_TYPE_MISMATCH
-    whenever an int footer wins schema inference (r13 review find: the
-    r13 int-cast fix only covered FUTURE migrations). Each long-typed
-    gen dir is rewritten with batch cast to int via a tmp + two-rename
-    swap (crash windows closed by :func:`_recover_pair_repairs`, wired
-    into the stream's per-batch preamble).
-
-    Cost: one footer-only schema read per gen dir — bounded by the fold
-    cadence — so it is called from ``near_dedup_stream``'s WIRING, once
-    per stream start, not per batch. Returns the repaired dir names."""
-    from pyspark.sql import functions as F  # local: keep module top light
-
-    from .. import fsutil
-
-    _recover_pair_repairs(spark, path)
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    repaired: list[str] = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if _gen_dir_id(name) is None:
-            continue
-        sub = f"{path}/{name}"
-        types = {
-            f.name: f.dataType.simpleString()
-            for f in spark.read.parquet(sub).schema.fields
-        }
-        if types.get("batch") != "bigint":
-            continue
-        tmp = f"{path}/.repair.{name}"
-        bak = f"{path}/.prerepair.{name}"
-        fsutil.delete(spark, tmp)
-        fsutil.delete(spark, bak)
-        spark.read.parquet(sub).withColumn(
-            "batch", F.col("batch").cast("int")
-        ).coalesce(1).write.parquet(tmp)
-        if not fsutil.rename(spark, sub, bak):
-            raise IOError(f"pairs repair: rename {sub} -> {bak} failed")
-        if not fsutil.rename(spark, tmp, sub):
-            raise IOError(
-                f"pairs repair: rename {tmp} -> {sub} failed; original "
-                f"parked at {bak} (recovered by _recover_pair_repairs)"
-            )
-        fsutil.delete(spark, bak)
-        _LOG.warning(
-            "repair_pairs_batch_types(%s): rewrote %s batch INT64 -> "
-            "INT32 (r12-migration artifact)", path, name,
-        )
-        repaired.append(name)
-    return repaired
-
-
 def drop_stale_batch_dirs(spark, path: str, batch_id: int) -> list[int]:
     """Delete ``batch=<id>`` directories with ``id >= batch_id`` from a
     stream-owned layout. Normal serial streaming never has one (batches
@@ -1012,117 +836,6 @@ def drop_stale_batch_dirs(spark, path: str, batch_id: int) -> list[int]:
             path, batch_id, sorted(dropped),
         )
     return sorted(dropped)
-
-
-def _recover_pair_dir_swaps(spark, path: str) -> None:
-    """Finish :func:`compact_pairs_dirs` swaps that crashed mid-rename:
-    a ``.precompact.batch=<k>`` backup without its canonical
-    ``batch=<k>`` dir IS that batch's pairs — rename it back; with the
-    canonical present it is provably stale — delete it. Leftover
-    ``.compact.batch=<k>`` tmp dirs are always incomplete writes and
-    are removed. Dot-prefixed names keep both invisible to Parquet
-    partition discovery throughout."""
-    from .. import fsutil
-
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if name.startswith(".compact.batch="):
-            fs.delete(status.getPath(), True)
-        elif name.startswith(".precompact.batch="):
-            canon = f"{path}/{name[len('.precompact.'):]}"
-            if fsutil.exists(spark, canon):
-                fs.delete(status.getPath(), True)
-            elif not fsutil.rename(spark, f"{path}/{name}", canon):
-                raise IOError(
-                    f"pairs recovery rename {name} failed (Hadoop rename "
-                    "returned false); batch left at the backup path"
-                )
-
-
-def compact_pairs_dirs(spark, path: str) -> list[int]:
-    """Compact a pairs output (``batch=<id>`` dirs, never relabeled —
-    the batch column is user-facing provenance) INCREMENTALLY: rewrite
-    only batch dirs holding more than one data file, to exactly one
-    file each. The whole-path :func:`compact_index` re-read and
-    re-wrote the ENTIRE pairs history every cadence — linear cost per
-    fold, quadratic total work over the stream's life (r10 advice);
-    here an already-compacted dir (1 file) is skipped by inspection, so
-    each batch dir is rewritten at most once ever and the per-cadence
-    cost is O(new batches). No high-water-mark sidecar needed: the
-    1-file state is self-describing and survives replays that overwrite
-    a dir.
-
-    Residual small-files dimension, deliberately unbounded: the
-    DIRECTORY count still grows one per micro-batch forever, because
-    batch dirs must survive un-merged to keep their provenance. At a
-    batch per minute that is ~0.5 M directories/year — acceptable for a
-    pairs LOG on HDFS, but a deployment that reads the full history per
-    query should periodically export it to a date-partitioned table.
-
-    Per-dir crash-safe swap (tmp ``.compact.batch=<k>`` → backup
-    ``.precompact.batch=<k>``, both dot-prefixed so partition discovery
-    never sees them); :func:`_recover_pair_dir_swaps` finishes crashed
-    swaps and runs first here and at every stream batch start. Returns
-    the batch ids rewritten.
-
-    CONCURRENT-READER CAVEAT: each swap has a transient window (between
-    rename dir→backup and rename tmp→dir) in which a full-history scan
-    by an out-of-band reader sees that one batch missing entirely. The
-    serial stream itself never reads pairs, so it is safe — but the
-    pairs log is a user-facing output: do not run this compaction
-    concurrently with external full-history reads, or accept that a
-    scan racing a swap can transiently miss one batch (it reappears,
-    complete and identical, on the next listing)."""
-    from .. import fsutil
-
-    _recover_pair_dir_swaps(spark, path)
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    if not fs.exists(jpath):
-        return []
-    rewritten: list[int] = []
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if not name.startswith("batch="):
-            continue
-        try:
-            bid = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
-        n_files = sum(
-            1
-            for s in fs.listStatus(status.getPath())
-            if s.getPath().getName().endswith(".parquet")
-        )
-        if n_files <= 1:
-            continue
-        dir_path = f"{path}/{name}"
-        tmp = f"{path}/.compact.batch={bid}"
-        backup = f"{path}/.precompact.batch={bid}"
-        fsutil.delete(spark, tmp)
-        # reading the bare partition dir yields exactly the file content
-        # (the batch column lives in the dir name, as in the original
-        # write); coalesce(1), not repartition: no shuffle, one file
-        spark.read.parquet(dir_path).coalesce(1).write.parquet(tmp)
-        if not fsutil.rename(spark, dir_path, backup):
-            raise IOError(
-                f"pairs compact: rename {dir_path} -> {backup} failed; "
-                "batch left untouched"
-            )
-        if not fsutil.rename(spark, tmp, dir_path):
-            if not fsutil.rename(spark, backup, dir_path):
-                raise IOError(
-                    f"pairs compact: swap AND rollback failed for "
-                    f"{dir_path}; data intact at {backup}"
-                )
-            raise IOError(
-                f"pairs compact: swap failed for {dir_path}; rolled back"
-            )
-        fsutil.delete(spark, backup)
-        rewritten.append(bid)
-    return sorted(rewritten)
 
 
 def fold_stream_index(
@@ -1267,7 +980,9 @@ def minhash_probe_candidates(
     corpus-wide document frequency); the hot set broadcasts into
     anti-joins on both sides, so the index branch stays Exchange-free
     below the probe join. Default None keeps single-scan probes."""
-    _check_band_index_meta(spark, index_path, n, num_hashes, bands)
+    _require_meta(
+        spark, index_path, _BAND_INDEX_META, _band_meta(n, num_hashes, bands)
+    )
     new_rows = minhash_band_rows(new_df, text_col, id_col, n, num_hashes, bands)
     # computed once, consumed by two join branches (index probe + batch
     # self-join): cut lineage so the shingle+minhash pipeline runs once
@@ -1397,55 +1112,8 @@ def _chunked_signatures(sigs: DataFrame, blocks: int, bits: int = 64) -> DataFra
 _SIMHASH_INDEX_META = "_simhash_index_meta.json"
 
 
-def _write_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    import json as _json
-
-    from .. import fsutil
-
-    fsutil.write_text_atomic(
-        spark,
-        f"{path}/{_SIMHASH_INDEX_META}",
-        _json.dumps({"kind": "simhash_blocks", "bits": 64, "blocks": blocks}),
-    )
-
-
-def _check_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    import json as _json
-
-    from .. import fsutil
-
-    _recover_precompact(spark, path)
-    try:
-        meta = _json.loads(fsutil.read_text(spark, f"{path}/{_SIMHASH_INDEX_META}"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"no {_SIMHASH_INDEX_META} sidecar at {path}: index was not "
-            "written by simhash_index_write, cannot validate parameters"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_SIMHASH_INDEX_META} sidecar at {path} is corrupt ({e}): "
-            "likely a crash mid-write by an older writer — rebuild the "
-            "index (simhash_index_write) or restore the sidecar by hand"
-        ) from None
-    want = {"kind": "simhash_blocks", "bits": 64, "blocks": blocks}
-    if meta != want:
-        raise ValueError(
-            f"simhash index at {path} was built with {meta}, used with "
-            f"{want} — mismatched parameters would corrupt every result"
-        )
-
-
-def _ensure_simhash_index_meta(spark, path: str, blocks: int) -> None:
-    """Write-iff-absent / validate-if-present — same restart-drift guard
-    as :func:`_ensure_band_index_meta` (review find)."""
-    from .. import fsutil
-
-    _recover_precompact(spark, path)
-    if fsutil.exists(spark, f"{path}/{_SIMHASH_INDEX_META}"):
-        _check_simhash_index_meta(spark, path, blocks)
-    else:
-        _write_simhash_index_meta(spark, path, blocks)
+def _simhash_meta(blocks: int) -> dict:
+    return {"kind": "simhash_blocks", "bits": 64, "blocks": blocks}
 
 
 def simhash_index_write(
@@ -1463,7 +1131,9 @@ def simhash_index_write(
         simhash_signatures(df, text_col, id_col), blocks
     )
     chunked.write.mode("overwrite").partitionBy("blk").parquet(path)
-    _write_simhash_index_meta(df.sparkSession, path, blocks)
+    index_meta.write(
+        df.sparkSession, path, _SIMHASH_INDEX_META, _simhash_meta(blocks)
+    )
 
 
 def simhash_index_append(
@@ -1477,7 +1147,9 @@ def simhash_index_append(
     against the parameter sidecar); ``probe → append`` per shard is the
     same incremental-ingest loop :func:`minhash_index_append` documents
     — O(shard) writes, resident files untouched."""
-    _check_simhash_index_meta(df.sparkSession, path, blocks)
+    _require_meta(
+        df.sparkSession, path, _SIMHASH_INDEX_META, _simhash_meta(blocks)
+    )
     _chunked_signatures(simhash_signatures(df, text_col, id_col), blocks).write.mode(
         "append"
     ).partitionBy("blk").parquet(path)
@@ -1516,7 +1188,7 @@ def simhash_probe_candidates(
             "every chunk); raise blocks past max_hamming or pass "
             "partial_recall=True to accept the heuristic"
         )
-    _check_simhash_index_meta(spark, index_path, blocks)
+    _require_meta(spark, index_path, _SIMHASH_INDEX_META, _simhash_meta(blocks))
     new_rows = _materialize(
         _chunked_signatures(simhash_signatures(new_df, text_col, id_col), blocks),
         materialize,
@@ -2007,6 +1679,9 @@ def connected_components(
 # survivors in, compact_index/fold_stream_index bound the file counts.
 
 _EXACT_INDEX_META = "_exact_index_meta.json"
+# no parameters can drift (md5 is md5), but the sidecar still guards
+# against pointing an exact probe at a band or chunk index
+_EXACT_META = {"kind": "exact_md5"}
 
 
 def exact_digest_rows(
@@ -2027,55 +1702,6 @@ def exact_digest_rows(
     ).withColumn("pfx", F.substring("digest", 1, 1))
 
 
-def _write_exact_index_meta(spark, path: str) -> None:
-    import json as _json
-
-    from .. import fsutil
-
-    fsutil.write_text_atomic(
-        spark, f"{path}/{_EXACT_INDEX_META}", _json.dumps({"kind": "exact_md5"})
-    )
-
-
-def _check_exact_index_meta(spark, path: str) -> None:
-    """No parameters can drift (md5 is md5), but the sidecar still
-    guards against pointing an exact probe at a BAND or chunk index —
-    the join key would silently be garbage — and hosts the crashed-
-    compact recovery hook like every other index entry point."""
-    import json as _json
-
-    from .. import fsutil
-
-    _recover_precompact(spark, path)
-    try:
-        meta = _json.loads(fsutil.read_text(spark, f"{path}/{_EXACT_INDEX_META}"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"no {_EXACT_INDEX_META} sidecar at {path}: index was not "
-            "written by exact_index_write, cannot validate"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_EXACT_INDEX_META} sidecar at {path} is corrupt ({e}): "
-            "likely a crash mid-write by an older writer — rebuild the "
-            "index (exact_index_write) or restore the sidecar by hand"
-        ) from None
-    if meta != {"kind": "exact_md5"}:
-        raise ValueError(
-            f"index at {path} is {meta}, not an exact_md5 digest index"
-        )
-
-
-def _ensure_exact_index_meta(spark, path: str) -> None:
-    from .. import fsutil
-
-    _recover_precompact(spark, path)
-    if fsutil.exists(spark, f"{path}/{_EXACT_INDEX_META}"):
-        _check_exact_index_meta(spark, path)
-    else:
-        _write_exact_index_meta(spark, path)
-
-
 def exact_index_write(
     df: DataFrame, path: str, text_col: str = "text", id_col: str = "doc_id"
 ) -> None:
@@ -2087,7 +1713,7 @@ def exact_index_write(
     exact_digest_rows(df, text_col, id_col).repartition(F.col("pfx")).write.mode(
         "overwrite"
     ).partitionBy("pfx").parquet(path)
-    _write_exact_index_meta(df.sparkSession, path)
+    index_meta.write(df.sparkSession, path, _EXACT_INDEX_META, _EXACT_META)
 
 
 def exact_index_append(
@@ -2097,7 +1723,7 @@ def exact_index_append(
     the probe's survivors — appending known duplicates is allowed but
     makes them extra canonical-candidates forever). Parquet append only
     adds files; run :func:`compact_index` (``["pfx"]``) on cadence."""
-    _check_exact_index_meta(df.sparkSession, path)
+    _require_meta(df.sparkSession, path, _EXACT_INDEX_META, _EXACT_META)
     exact_digest_rows(df, text_col, id_col).repartition(F.col("pfx")).write.mode(
         "append"
     ).partitionBy("pfx").parquet(path)
@@ -2150,7 +1776,7 @@ def exact_probe_duplicates(
     undercut case, not a collect_list that concentrates one content's
     million holders into a single aggregation buffer; the only arrays
     are batch-sized (per-shard, caller-bounded)."""
-    _check_exact_index_meta(spark, index_path)
+    _require_meta(spark, index_path, _EXACT_INDEX_META, _EXACT_META)
     new_rows = _materialize(exact_digest_rows(new_df, text_col, id_col), materialize)
     idx = spark.read.parquet(index_path)
     if index_filter is not None:

@@ -38,7 +38,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import _assign_clusters, ivf_train_centroids
+from . import index_meta
+from .similarity import (
+    _INDEX_META,
+    _assign_clusters,
+    _centroid_digest,
+    ivf_train_centroids,
+)
 
 # rows per GEMM slab inside a cluster task: peak extra memory is
 # _BLOCK × cluster_rows float32 scores (2048 × 200k ≈ 1.6 GB worst case
@@ -221,8 +227,6 @@ def semdedup_index_write(
     threshold they were made at, so probes refuse a different one.
     Returns the (possibly trained) centroids — persist them next to the
     index; probes need them to assign new batches."""
-    from .similarity import _centroid_digest, _write_index_meta
-
     if centroids is None:
         centroids = ivf_train_centroids(
             embeddings, n_centroids, iterations, id_col, vec_col
@@ -252,9 +256,10 @@ def semdedup_index_write(
         .agg(F.count(F.lit(1)).alias("n"))
         .collect()
     }
-    _write_index_meta(
+    index_meta.write(
         spark,
         path,
+        _INDEX_META,
         {
             "kind": "semdedup",
             "dim": len(centroids[0]),
@@ -267,10 +272,7 @@ def semdedup_index_write(
     return centroids
 
 
-def _validate_semdedup_meta(spark, path: str, centroids, threshold):
-    from .similarity import _centroid_digest, _read_index_meta
-
-    meta = _read_index_meta(spark, path)
+def _check_semdedup_meta(path: str, meta: dict, centroids, threshold) -> None:
     if meta.get("kind") != "semdedup":
         raise ValueError(
             f"index at {path} is {meta.get('kind')!r}, not semdedup"
@@ -287,7 +289,6 @@ def _validate_semdedup_meta(spark, path: str, centroids, threshold):
             f"{meta['threshold']}, refusing to probe at {threshold} — "
             "resident verdicts are not comparable across thresholds"
         )
-    return meta
 
 
 def ensure_semdedup_meta(
@@ -295,30 +296,22 @@ def ensure_semdedup_meta(
 ) -> None:
     """Write the index sidecar iff absent; otherwise VALIDATE against
     it — the wiring-time protocol shared with the band/simhash/exact
-    stream indexes (``dedup._ensure_band_index_meta``): a stream
-    restarted with drifted centroids or threshold must raise, not stamp
-    the new parameters over the index it would corrupt."""
-    from .similarity import (
+    stream indexes (``index_meta.ensure``): a stream restarted with
+    drifted centroids or threshold must raise, not stamp the new
+    parameters over the index it would corrupt."""
+    index_meta.ensure(
+        spark,
+        path,
         _INDEX_META,
-        _centroid_digest,
-        _write_index_meta,
+        {
+            "kind": "semdedup",
+            "dim": len(centroids[0]),
+            "n_centroids": len(centroids),
+            "threshold": float(threshold),
+            "centroid_digest": _centroid_digest(centroids),
+        },
+        lambda meta: _check_semdedup_meta(path, meta, centroids, threshold),
     )
-    from .. import fsutil
-
-    if fsutil.exists(spark, f"{path}/{_INDEX_META}"):
-        _validate_semdedup_meta(spark, path, centroids, threshold)
-    else:
-        _write_index_meta(
-            spark,
-            path,
-            {
-                "kind": "semdedup",
-                "dim": len(centroids[0]),
-                "n_centroids": len(centroids),
-                "threshold": float(threshold),
-                "centroid_digest": _centroid_digest(centroids),
-            },
-        )
 
 
 def semdedup_bootstrap_verdicts(
@@ -395,7 +388,8 @@ def semdedup_probe(
     import pandas as pd
 
     spark = batch.sparkSession
-    meta = _validate_semdedup_meta(spark, path, centroids, threshold)
+    meta = index_meta.read(spark, path, _INDEX_META)
+    _check_semdedup_meta(path, meta, centroids, threshold)
     thr = float(meta["threshold"])
 
     # persist: the touched-cluster census and the union below both need
@@ -764,10 +758,8 @@ def semdedup_index_append(
     # it, and the probe-side near-limit census (semdedup_probe) covers
     # the window in between. Read-modify-write of the sidecar remains
     # safe under the append contract (single writer, new ids only).
-    from .similarity import _read_index_meta, _write_index_meta
-
     spark = batch.sparkSession
-    meta = _read_index_meta(spark, path)
+    meta = index_meta.read(spark, path, _INDEX_META)
     if meta.get("kept_per_cluster") is not None:
         # pre-sidecar-census indexes (r12-era) keep the key absent —
         # seeding it with only this batch's counts would undercount the
@@ -788,7 +780,7 @@ def semdedup_index_append(
         for c in touched:
             counts[str(c)] = int(recount.get(c, 0))
         meta["kept_per_cluster"] = counts
-        _write_index_meta(spark, path, meta)
+        index_meta.write(spark, path, _INDEX_META, meta)
     return rows.select(id_col, "cluster", "centroid_sim", "kept")
 
 

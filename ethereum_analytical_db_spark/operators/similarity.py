@@ -21,6 +21,7 @@ from pyspark import AccumulatorParam
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import index_meta
 from .materialize import materialize as _materialize
 
 DEC = "decimal(12,6)"
@@ -916,13 +917,9 @@ def cosine_topk_ivf(
     return cosine_topk_bruteforce(candidates, query_vector, k, id_col, vec_col)
 
 
-# Index metadata sidecar: probes that recompute bucket/cluster routing
-# from caller-supplied parameters would silently read the wrong partition
-# if those parameters differ from what the index was built with. The
-# writers record the build parameters in an underscore-prefixed JSON file
-# INSIDE the index directory (parquet scans ignore `_*` files); the probe
-# functions validate before pruning. Local-fs I/O here — at cluster scale
-# the same file rides on the object store next to _SUCCESS.
+# The IVF and LSH indexes (and semdedup's, operators/semdedup.py) record
+# their build parameters in this sidecar; probes and appends validate
+# against it before pruning (operators/index_meta.py).
 _INDEX_META = "_INDEX_META.json"
 
 
@@ -933,37 +930,6 @@ def _centroid_digest(centroids: list[list[float]]) -> str:
     return hashlib.sha256(
         _json.dumps([[float(x) for x in c] for c in centroids]).encode()
     ).hexdigest()
-
-
-def _write_index_meta(spark: SparkSession, path: str, meta: dict) -> None:
-    """Sidecar IO through the Hadoop FS API (`fsutil`): HDFS/S3 index
-    paths behave like local ones (the indexes exist FOR those stores)."""
-    import json as _json
-
-    from .. import fsutil
-
-    fsutil.write_text_atomic(spark, f"{path}/{_INDEX_META}", _json.dumps(meta))
-
-
-def _read_index_meta(spark: SparkSession, path: str) -> dict:
-    import json as _json
-
-    from .. import fsutil
-    from .dedup import _recover_precompact
-
-    _recover_precompact(spark, path)
-    try:
-        return _json.loads(fsutil.read_text(spark, f"{path}/{_INDEX_META}"))
-    except FileNotFoundError:
-        raise ValueError(
-            f"no {_INDEX_META} sidecar at {path}: index was not written by "
-            "ivf_index_write/lsh_index_write, cannot validate probe parameters"
-        ) from None
-    except ValueError as e:  # json.JSONDecodeError ⊂ ValueError
-        raise ValueError(
-            f"{_INDEX_META} sidecar at {path} is corrupt ({e}): likely a "
-            "crash mid-write by an older writer — rebuild the index"
-        ) from None
 
 
 def ivf_index_write(
@@ -982,9 +948,10 @@ def ivf_index_write(
     ivf_assign(embeddings, centroids, id_col, vec_col).write.mode(
         "overwrite"
     ).partitionBy("cluster").parquet(path)
-    _write_index_meta(
+    index_meta.write(
         embeddings.sparkSession,
         path,
+        _INDEX_META,
         {
             "kind": "ivf",
             "dim": len(centroids[0]),
@@ -1021,7 +988,7 @@ def ivf_index_append(
     with ``["bucket"]``) — pinned by
     test_ivf_index_compact_bounds_files_and_keeps_results.
     """
-    meta = _read_index_meta(embeddings.sparkSession, path)
+    meta = index_meta.read(embeddings.sparkSession, path, _INDEX_META)
     if meta.get("kind") != "ivf":
         raise ValueError(f"index at {path} is {meta.get('kind')!r}, not ivf")
     if meta.get("centroid_digest") != _centroid_digest(centroids):
@@ -1048,7 +1015,7 @@ def cosine_topk_ivf_index(
     partition filter on the cluster-partitioned layout, so the scan reads
     ~nprobe/n_centroids of the files. Train once (``ivf_train_centroids``),
     write once (``ivf_index_write``), probe per query."""
-    meta = _read_index_meta(spark, path)
+    meta = index_meta.read(spark, path, _INDEX_META)
     if meta.get("kind") != "ivf":
         raise ValueError(f"index at {path} is {meta.get('kind')!r}, not ivf")
     if meta.get("centroid_digest") != _centroid_digest(centroids):
@@ -1082,9 +1049,10 @@ def lsh_index_write(
     _assign_sign_buckets(
         embeddings, _plane_matrix(dim, planes, seed), id_col, vec_col
     ).write.mode("overwrite").partitionBy("bucket").parquet(path)
-    _write_index_meta(
+    index_meta.write(
         embeddings.sparkSession,
         path,
+        _INDEX_META,
         {"kind": "lsh", "dim": dim, "planes": planes, "seed": seed},
     )
 
@@ -1100,7 +1068,7 @@ def lsh_index_append(
     the index wasn't built with) and append to the bucket-partitioned
     layout. Same contract as :func:`ivf_index_append`: batch ids must be
     new; each append touches only the partitions its vectors hash to."""
-    meta = _read_index_meta(embeddings.sparkSession, path)
+    meta = index_meta.read(embeddings.sparkSession, path, _INDEX_META)
     if meta.get("kind") != "lsh":
         raise ValueError(f"index at {path} is {meta.get('kind')!r}, not lsh")
     planes = _plane_matrix(meta["dim"], meta["planes"], meta["seed"])
@@ -1163,7 +1131,7 @@ def cosine_topk_lsh_index(
     ``nprobe`` directories out of 2^planes (multi-probe: the extra
     buckets are the lowest-margin bit flips, the standard recall knob
     that costs probes, not index copies)."""
-    meta = _read_index_meta(spark, path)
+    meta = index_meta.read(spark, path, _INDEX_META)
     if meta.get("kind") != "lsh":
         raise ValueError(f"index at {path} is {meta.get('kind')!r}, not lsh")
     built = (meta.get("dim"), meta.get("planes"), meta.get("seed"))

@@ -159,11 +159,11 @@ def near_dedup_stream(
     micro-batch forever (~0.5 M dirs/year at a batch a minute), while
     each pairs row is rewritten at most once ever. Default None never
     compacts (run ``compact_index``/``fold_pairs_gens`` out-of-band
-    instead — NOT the warehouse-era ``compact_pairs_dirs``, which scans
-    ``batch=`` dirs and is a silent no-op on the generational layout).
-    A pre-r12 pairs log (``batch=<k>`` partition dirs) is upgraded in
-    place by ``migrate_pairs_layout``, called from the per-batch
-    preamble — without it a mixed root fails Spark partition discovery.
+    instead). A pairs root in the pre-generational layout
+    (``batch=<k>`` partition dirs) is refused at wiring time with a
+    ``ValueError``, before any batch runs and without touching either
+    path: this build no longer reads that layout, so point the stream
+    at a fresh pairs path.
 
     State design: unlike ``dedup_exact_stream``, the dedup state lives
     in the INDEX (Parquet on the warehouse filesystem), not in Spark
@@ -201,6 +201,7 @@ def near_dedup_stream(
     Returns the ``DataStreamWriter`` — caller adds checkpoint/trigger
     and ``.start()``.
     """
+    from .. import fsutil
     from ..operators import dedup as d
 
     # family-specific hook: build this batch's index rows FROM the
@@ -229,7 +230,10 @@ def near_dedup_stream(
             )
 
         def write_meta(spark):
-            d._ensure_band_index_meta(spark, index_path, n, num_hashes, bands)
+            d._ensure_meta(
+                spark, index_path, d._BAND_INDEX_META,
+                d._band_meta(n, num_hashes, bands),
+            )
 
         index_partition = "band"
     elif family == "simhash":
@@ -254,7 +258,10 @@ def near_dedup_stream(
             )
 
         def write_meta(spark):
-            d._ensure_simhash_index_meta(spark, index_path, blocks)
+            d._ensure_meta(
+                spark, index_path, d._SIMHASH_INDEX_META,
+                d._simhash_meta(blocks),
+            )
 
         index_partition = "blk"
     elif family == "exact":
@@ -276,7 +283,9 @@ def near_dedup_stream(
             return d.exact_digest_rows(batch_df, text_col, id_col)
 
         def write_meta(spark):
-            d._ensure_exact_index_meta(spark, index_path)
+            d._ensure_meta(
+                spark, index_path, d._EXACT_INDEX_META, d._EXACT_META
+            )
 
         index_partition = "pfx"
     elif family == "semantic":
@@ -322,13 +331,16 @@ def near_dedup_stream(
             "or 'semantic'"
         )
 
-    # one-time layout repair at WIRING time: gens migrated by the r12
-    # code carry batch as INT64 while native gens are INT32 — a mixed
-    # root fails reads once an int footer wins inference; the sweep
-    # costs one footer read per gen dir, so it runs per stream start,
-    # not per batch (crash windows closed by _recover_pair_repairs in
-    # the per-batch preamble)
-    d.repair_pairs_batch_types(stream_docs.sparkSession, pairs_path)
+    # the pre-generational pairs layout (batch=<k> partition dirs, batch
+    # only in the dir name) cannot share a root with gen= dirs — Spark
+    # partition discovery fails on the mix — and this build carries no
+    # upgrade path for it: refuse before writing anything
+    if fsutil.glob_exists(stream_docs.sparkSession, f"{pairs_path}/batch=*"):
+        raise ValueError(
+            f"pairs path {pairs_path} holds batch=<k> dirs: this build no "
+            "longer reads the pre-generational batch= pairs layout — "
+            "point the stream at a fresh pairs path"
+        )
 
     # parameter sidecar written at WIRING time, before any batch runs:
     # writing it inside the batch (after the index parquet) left a crash
@@ -345,8 +357,6 @@ def near_dedup_stream(
             return
         batch_df.persist()
         try:
-            from .. import fsutil
-
             # finish any crashed compaction FIRST: a pairs (or index)
             # dir parked at .precompact would otherwise be shadowed by
             # this batch's write recreating the canonical path, and the
@@ -356,13 +366,7 @@ def near_dedup_stream(
             # the recovery lives here)
             d._recover_precompact(spark, pairs_path)
             d._recover_precompact(spark, index_path)
-            d._recover_pair_dir_swaps(spark, pairs_path)
             d._recover_pair_fold(spark, pairs_path)
-            d._recover_pair_repairs(spark, pairs_path)
-            # pre-r12 pairs logs (batch=<k> partition dirs) upgrade in
-            # place to the generational layout — a mixed root would
-            # fail partition discovery and evade the stale-gen sweep
-            d.migrate_pairs_layout(spark, pairs_path)
 
             # replay/retry hygiene: drop batch dirs / pair generations
             # at/after this batch's id. A from-scratch replay (checkpoint

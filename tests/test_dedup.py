@@ -973,14 +973,17 @@ def test_compact_index_aborts_when_swap_rename_fails(spark, tmp_path, monkeypatc
 def test_precompact_recovery_at_every_index_entry_point(spark, tmp_path):
     """The crashed-compact destruction window (r9 ADVICE, medium): if
     compact_index dies between its two renames, the index exists ONLY at
-    <path>.precompact. Every entry point — ensure/check meta (the stream
-    wiring + probe/append paths) — must finish the recovery rename FIRST;
-    previously the wiring-time sidecar write recreated the canonical dir
-    sidecar-only, the probe bootstrapped empty, and the next compact
-    deleted the backup as 'provably stale', destroying the only copy."""
+    <path>.precompact. Every entry point — sidecar ensure/read (the
+    stream wiring + probe/append paths) — must finish the recovery
+    rename FIRST; otherwise the wiring-time sidecar write recreates the
+    canonical dir sidecar-only, the probe bootstraps empty, and the next
+    compact deletes the backup as 'provably stale', destroying the only
+    copy. The semdedup stream wiring (ensure_semdedup_meta) is one of
+    those entry points."""
     import os
 
-    from ethereum_analytical_db_spark.operators import dedup
+    from ethereum_analytical_db_spark.operators import dedup, index_meta
+    from ethereum_analytical_db_spark.operators import semdedup
 
     docs = spark.createDataFrame(
         [(i, f"alpha w{i} beta gamma delta {'x' * (i % 3)}") for i in range(12)],
@@ -988,34 +991,51 @@ def test_precompact_recovery_at_every_index_entry_point(spark, tmp_path):
     )
     idx = str(tmp_path / "band_index")
     dedup.minhash_index_write(docs, idx)
-    want = {
-        (r["doc"], r["band"], r["bucket"])
-        for r in spark.read.parquet(idx).collect()
-    }
+    band = dedup._band_meta(3, 32, 8)
 
-    def crash(entry):
-        os.rename(idx, idx + ".precompact")  # the mid-compact crash state
-        assert not os.path.isdir(idx)
+    def rows(path):
+        return sorted(map(str, spark.read.parquet(path).collect()))
+
+    def crash(path, entry):
+        want = rows(path)
+        os.rename(path, path + ".precompact")  # the mid-compact crash state
+        assert not os.path.isdir(path)
         entry()
-        assert os.path.isdir(idx) and not os.path.isdir(idx + ".precompact")
-        got = {
-            (r["doc"], r["band"], r["bucket"])
-            for r in spark.read.parquet(idx).collect()
-        }
-        assert got == want  # full content recovered, nothing bootstrapped
+        assert os.path.isdir(path) and not os.path.isdir(path + ".precompact")
+        assert rows(path) == want  # full content recovered, nothing bootstrapped
 
     # the stream-wiring path (write-iff-absent would have recreated it)
-    crash(lambda: dedup._ensure_band_index_meta(spark, idx, 3, 32, 8))
+    crash(
+        idx,
+        lambda: index_meta.ensure(
+            spark, idx, dedup._BAND_INDEX_META, band,
+            lambda meta: dedup._check_meta(idx, band, meta),
+        ),
+    )
     # the probe/append validation path
-    crash(lambda: dedup._check_band_index_meta(spark, idx, 3, 32, 8))
+    crash(idx, lambda: index_meta.read(spark, idx, dedup._BAND_INDEX_META))
     # compact_index itself still recovers-and-compacts in one call
-    crash(lambda: dedup.compact_index(spark, idx, ["band"]))
+    crash(idx, lambda: dedup.compact_index(spark, idx, ["band"]))
 
     # and a probe over the recovered index answers as if nothing happened
     probe = spark.createDataFrame(
         [(900, "alpha w3 beta gamma delta")], "doc_id long, text string"
     )
     assert dedup.minhash_probe_candidates(spark, idx, probe).count() >= 0
+
+    # the semantic stream's wiring over a 12-row verdict index
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 3 == 0), float(i % 3 == 1), float(i)]) for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )
+    sem_idx = str(tmp_path / "sem_index")
+    cents = semdedup.semdedup_index_write(
+        vecs, sem_idx, threshold=0.9, n_centroids=2, iterations=2
+    )
+    crash(
+        sem_idx, lambda: semdedup.ensure_semdedup_meta(spark, sem_idx, cents, 0.9)
+    )
+    assert spark.read.parquet(sem_idx).count() == 12
 
 
 def test_corrupt_sidecar_raises_actionable_error(spark, tmp_path):
@@ -1026,7 +1046,7 @@ def test_corrupt_sidecar_raises_actionable_error(spark, tmp_path):
     import pytest
 
     from ethereum_analytical_db_spark import fsutil
-    from ethereum_analytical_db_spark.operators import dedup
+    from ethereum_analytical_db_spark.operators import dedup, index_meta
 
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma")], "doc_id long, text string"
@@ -1040,7 +1060,7 @@ def test_corrupt_sidecar_raises_actionable_error(spark, tmp_path):
     # truncate the sidecar the way a crash mid-write would have
     fsutil.write_text(spark, f"{idx}/{dedup._BAND_INDEX_META}", '{"kind": "minh')
     with pytest.raises(ValueError, match="corrupt"):
-        dedup._check_band_index_meta(spark, idx, 3, 32, 8)
+        index_meta.read(spark, idx, dedup._BAND_INDEX_META)
 
 
 def _exact_recompute_pairs(rows):
@@ -1145,7 +1165,7 @@ def test_exact_probe_matches_batch_recompute_filtered_to_shard(spark, tmp_path):
 def test_exact_index_rejects_wrong_kind_and_validates(spark, tmp_path):
     import pytest
 
-    from ethereum_analytical_db_spark.operators import dedup
+    from ethereum_analytical_db_spark.operators import dedup, index_meta
 
     docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     band_idx = str(tmp_path / "band_idx")
@@ -1157,7 +1177,7 @@ def test_exact_index_rejects_wrong_kind_and_validates(spark, tmp_path):
     # a band probe against an exact index: the band sidecar is absent
     # (the exact one is there), so the check fails loudly either way
     with pytest.raises(ValueError, match="sidecar"):
-        dedup._check_band_index_meta(spark, exact_idx, 3, 32, 8)
+        index_meta.read(spark, exact_idx, dedup._BAND_INDEX_META)
     # and the kind field catches a hand-mislabeled sidecar
     import json
 
@@ -1169,7 +1189,7 @@ def test_exact_index_rejects_wrong_kind_and_validates(spark, tmp_path):
         json.dumps({"kind": "minhash_bands"}),
     )
     with pytest.raises(ValueError, match="not an exact_md5"):
-        dedup._check_exact_index_meta(spark, exact_idx)
+        dedup.exact_probe_duplicates(spark, exact_idx, docs)
 
 
 def test_exact_dedup_probe_registry_query(spark):

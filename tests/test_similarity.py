@@ -390,9 +390,8 @@ def test_ivf_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
     import glob
 
     from ethereum_analytical_db_spark.operators import dedup
-    from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
-    )
+    from ethereum_analytical_db_spark.operators import index_meta
+    from ethereum_analytical_db_spark.operators.similarity import _INDEX_META
 
     rows, _ = _mk_vectors()
     df_base = spark.createDataFrame(rows[:10], "vec_id long, embedding array<float>")
@@ -412,14 +411,14 @@ def test_ivf_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
             spark, path, q, cents, k=5, nprobe=4
         ).collect()
     ]
-    meta_before = _read_index_meta(spark, path)
+    meta_before = index_meta.read(spark, path, _INDEX_META)
     n_clusters = len(glob.glob(f"{path}/cluster=*"))
     assert len(glob.glob(f"{path}/cluster=*/*.parquet")) > n_clusters
 
     dedup.compact_index(spark, path, ["cluster"])
 
     assert len(glob.glob(f"{path}/cluster=*/*.parquet")) == n_clusters
-    assert _read_index_meta(spark, path) == meta_before
+    assert index_meta.read(spark, path, _INDEX_META) == meta_before
     got = [
         (r["vec_id"], round(r["cosine"], 9))
         for r in similarity.cosine_topk_ivf_index(
@@ -444,9 +443,8 @@ def test_lsh_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
     import glob
 
     from ethereum_analytical_db_spark.operators import dedup
-    from ethereum_analytical_db_spark.operators.similarity import (
-        _read_index_meta,
-    )
+    from ethereum_analytical_db_spark.operators import index_meta
+    from ethereum_analytical_db_spark.operators.similarity import _INDEX_META
 
     rows, _ = _mk_vectors()
     dim = len(rows[0][1])
@@ -467,14 +465,14 @@ def test_lsh_index_compact_bounds_files_and_keeps_results(spark, tmp_path):
             spark, path, q, k=5, nprobe=4
         ).collect()
     ]
-    meta_before = _read_index_meta(spark, path)
+    meta_before = index_meta.read(spark, path, _INDEX_META)
     n_buckets = len(glob.glob(f"{path}/bucket=*"))
     assert len(glob.glob(f"{path}/bucket=*/*.parquet")) > n_buckets
 
     dedup.compact_index(spark, path, ["bucket"])
 
     assert len(glob.glob(f"{path}/bucket=*/*.parquet")) == n_buckets
-    assert _read_index_meta(spark, path) == meta_before
+    assert index_meta.read(spark, path, _INDEX_META) == meta_before
     got = [
         (r["vec_id"], round(r["cosine"], 9))
         for r in similarity.cosine_topk_lsh_index(
