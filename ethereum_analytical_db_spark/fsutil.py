@@ -9,7 +9,8 @@ exist for. These helpers route the same reads/writes through the
 JVM-side Hadoop FileSystem resolved from the path itself, so
 ``file:/``, ``hdfs:/`` and ``s3a:/`` index paths all behave
 identically. Driver-side only (sidecars are bounded metadata, never
-data).
+data). The crash-safe directory swap at the bottom (``replace_dir``)
+is the one rewrite protocol for warehouse tables and frozen indexes.
 """
 
 from __future__ import annotations
@@ -77,11 +78,6 @@ def rename(spark: SparkSession, src: str, dst: str) -> bool:
 def mkdirs(spark: SparkSession, path: str) -> None:
     fs, jpath = _fs_and_path(spark, path)
     fs.mkdirs(jpath)
-
-
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _fs_and_path(spark, path)
-    return fs.exists(jpath) and fs.getFileStatus(jpath).isDirectory()
 
 
 def list_names(spark: SparkSession, path: str) -> list[str]:
@@ -155,3 +151,70 @@ def read_text(spark: SparkSession, path: str) -> str:
         return bytes(sink.toByteArray()).decode("utf-8")
     finally:
         stream.close()
+
+
+# ---- crash-safe directory swap ----
+# A directory is rewritten in full at ``<path>.compact``, then swapped in
+# by two metadata renames: canonical → ``<path>.precompact`` (the
+# backup), tmp → canonical. The data always exists in full at one of
+# the three paths. ``Warehouse.compact`` and the frozen-index
+# rewrites (``dedup.compact_index`` / ``fold_stream_index``) share it.
+# Hadoop FileSystem.rename reports most failures by returning false,
+# not raising; every rename is checked, because a failed second rename
+# followed by deleting the backup would destroy the only full copy.
+
+
+def recover_swap(spark: SparkSession, path: str) -> None:
+    """Finish a swap that crashed between its two renames: canonical
+    path absent, the only full copy parked at ``<path>.precompact``.
+    Every entry point that reads, writes or probes ``path`` runs this
+    FIRST. Without it a write recreates the canonical dir (empty, or
+    holding only a sidecar), and the next swap sees canonical-present
+    and deletes the backup as stale, destroying the data. When the
+    canonical path exists the backup is left alone; ``replace_dir``
+    adjudicates its staleness."""
+    old = path + ".precompact"
+    if not exists(spark, path) and exists(spark, old):
+        if not rename(spark, old, path):
+            raise IOError(
+                f"recovery rename {old} -> {path} failed (Hadoop rename "
+                "returned false); data left at the backup path"
+            )
+
+
+def replace_dir(spark: SparkSession, path: str, fill):
+    """Replace the directory at ``path`` with what ``fill(tmp)`` writes
+    to the temp path ``tmp``, crash-safely (see the protocol above), and
+    return what ``fill`` returned. A failed first rename leaves ``path``
+    untouched; a failed second rename puts the backup back before
+    raising, so the canonical path never stops existing."""
+    tmp, old = path + ".compact", path + ".precompact"
+    recover_swap(spark, path)
+    delete(spark, tmp)
+    if exists(spark, path):
+        # only now is a leftover backup provably stale; with the
+        # canonical path absent it would be the sole surviving copy
+        delete(spark, old)
+    result = fill(tmp)
+    if not rename(spark, path, old):
+        raise IOError(
+            f"swap rename {path} -> {old} failed (Hadoop rename returned "
+            "false); original left untouched"
+        )
+    if not rename(spark, tmp, path):
+        restored = rename(spark, old, path)
+        raise IOError(
+            f"swap rename {tmp} -> {path} failed; original "
+            + ("restored" if restored else f"left at {old} (restore rename ALSO failed)")
+        )
+    delete(spark, old)
+    return result
+
+
+def delete_dir(spark: SparkSession, path: str) -> None:
+    """Remove ``path`` and its swap leftovers. Leftovers go FIRST: with
+    the canonical dir removed first, a crash before the backup's delete
+    would leave exactly the state ``recover_swap`` revives."""
+    delete(spark, path + ".precompact")
+    delete(spark, path + ".compact")
+    delete(spark, path)

@@ -505,32 +505,6 @@ def minhash_lsh_candidates_md5(
 _BAND_INDEX_META = "_band_index_meta.json"
 
 
-def _recover_precompact(spark, path: str) -> bool:
-    """Finish a :func:`compact_index` that crashed between its two
-    renames: canonical path absent, the only full copy parked at
-    ``<path>.precompact``. Every sidecar access (``index_meta.read`` and
-    ``index_meta.ensure``, so every probe, append and stream wiring)
-    runs this FIRST — without it, a stream restart's sidecar write
-    recreates the canonical dir with only the sidecar, the probe
-    bootstraps as an empty corpus (silently missing all cross-corpus
-    dups), and the next compact sees canonical-present and deletes the
-    backup as 'provably stale', destroying the only full copy (review
-    find). When canonical exists the backup is left alone —
-    ``compact_index`` itself adjudicates staleness. Returns True iff a
-    recovery rename happened."""
-    from .. import fsutil
-
-    old = path + ".precompact"
-    if fsutil.exists(spark, old) and not fsutil.exists(spark, path):
-        if not fsutil.rename(spark, old, path):
-            raise IOError(
-                f"recovery rename {old} -> {path} failed (Hadoop rename "
-                "returned false); index left at the backup path"
-            )
-        return True
-    return False
-
-
 def _band_meta(n: int, num_hashes: int, bands: int) -> dict:
     return {"kind": "minhash_bands", "n": n, "num_hashes": num_hashes, "bands": bands}
 
@@ -631,14 +605,14 @@ def compact_index(spark, path: str, partition_cols: list[str]) -> None:
     dirs survive, as the earlier-only probe requires; IVF/LSH via their
     partition column).
 
-    Crash-safe the same way ``Warehouse.compact`` is: write to
-    ``<path>.compact``, copy every ``_*.json`` sidecar, then two
-    metadata renames — the data always exists in full at one of the
-    paths, and a leftover ``.precompact`` from a crash is recovered
-    (canonical missing → the backup IS the index) or cleaned (canonical
-    present → provably stale) on the next compact. All FS ops go
-    through the Hadoop API (fsutil), so HDFS/S3 index paths work;
-    note object stores make `rename` a copy, the standard caveat."""
+    Crash-safe through the same directory swap as ``Warehouse.compact``
+    (``fsutil.replace_dir``): a rewrite beside the index, every
+    ``_*.json`` sidecar copied along, then two metadata renames — the
+    data always exists in full at one of the paths, and a crash's
+    leftover backup is recovered or cleaned on the next compact. All FS
+    ops go through the Hadoop API (fsutil), so HDFS/S3 index paths
+    work; note object stores make `rename` a copy, the standard
+    caveat."""
     _rewrite_index(spark, path, partition_cols)
 
 
@@ -867,7 +841,7 @@ def fold_stream_index(
     (:func:`drop_stale_batch_dirs`): replay batch 0 clears the
     surviving dirs and the replay rebuilds the index from scratch,
     deterministically. Crash-safety is the same swap as
-    :func:`compact_index` (``.precompact`` recovery wired into every
+    :func:`compact_index` (``fsutil.recover_swap`` wired into every
     index entry point)."""
     fold_to = current_batch - 1
     _rewrite_index(
@@ -885,54 +859,34 @@ def fold_stream_index(
 
 def _rewrite_index(spark, path: str, partition_cols: list[str], transform=None) -> None:
     """The crash-safe full-rewrite body shared by :func:`compact_index`
-    and :func:`fold_stream_index` (see compact_index for the swap
-    protocol). ``transform`` optionally rewrites the DataFrame between
-    read and write (the fold's batch relabeling)."""
+    and :func:`fold_stream_index`: the directory swap of
+    ``fsutil.replace_dir``, filled with the rewritten rows plus a copy
+    of every ``_*.json`` sidecar. ``transform`` optionally rewrites the
+    DataFrame between read and write (the fold's batch relabeling)."""
     import posixpath
 
     from .. import fsutil
 
-    tmp, old = path + ".compact", path + ".precompact"
-    _recover_precompact(spark, path)  # finish a crashed prior compact
-    if not fsutil.exists(spark, path):
-        raise ValueError(f"no index directory at {path}")
-    if fsutil.exists(spark, old):
-        fsutil.delete(spark, old)  # canonical present → backup is stale
-    fsutil.delete(spark, tmp)
-    df = spark.read.parquet(path)
-    if transform is not None:
-        df = transform(df)
-    # repartition BY the partition values: each value's rows land whole
-    # in one task → exactly one file per partition directory
-    df.repartition(*[F.col(c) for c in partition_cols]).write.partitionBy(
-        *partition_cols
-    ).parquet(tmp)
-    fs, jpath = fsutil._fs_and_path(spark, path)
-    for status in fs.listStatus(jpath):
-        name = status.getPath().getName()
-        if name.startswith("_") and name.endswith(".json"):  # sidecars
-            fsutil.write_text(
-                spark,
-                posixpath.join(tmp, name),
-                fsutil.read_text(spark, posixpath.join(path, name)),
-            )
-    # Hadoop FileSystem.rename reports most failures by returning false,
-    # not raising — unchecked, a failed second rename followed by
-    # delete(old) would destroy the only full copy (review find). Check
-    # both; on a failed swap put the backup back so the canonical path
-    # never stops existing.
-    if not fsutil.rename(spark, path, old):
-        raise IOError(
-            f"index rewrite: rename {path} -> {old} failed (Hadoop "
-            "rename returned false); index left untouched"
-        )
-    if not fsutil.rename(spark, tmp, path):
-        restored = fsutil.rename(spark, old, path)
-        raise IOError(
-            f"index rewrite: rename {tmp} -> {path} failed; original "
-            + ("restored" if restored else f"left at {old} (restore rename ALSO failed)")
-        )
-    fsutil.delete(spark, old)
+    def fill(tmp: str) -> None:
+        if not fsutil.exists(spark, path):
+            raise ValueError(f"no index directory at {path}")
+        df = spark.read.parquet(path)
+        if transform is not None:
+            df = transform(df)
+        # repartition BY the partition values: each value's rows land
+        # whole in one task → exactly one file per partition directory
+        df.repartition(*[F.col(c) for c in partition_cols]).write.partitionBy(
+            *partition_cols
+        ).parquet(tmp)
+        for name in fsutil.list_names(spark, path):
+            if name.startswith("_") and name.endswith(".json"):  # sidecars
+                fsutil.write_text(
+                    spark,
+                    posixpath.join(tmp, name),
+                    fsutil.read_text(spark, posixpath.join(path, name)),
+                )
+
+    fsutil.replace_dir(spark, path, fill)
 
 
 def minhash_probe_candidates(
@@ -1398,42 +1352,33 @@ def simhash_near_duplicates_md5(
     )
 
 
-def connected_components_twophase(
-    pairs: DataFrame,
-    src_col: str = "doc_a",
-    dst_col: str = "doc_b",
-    max_iterations: int = 50,
-    stats: dict | None = None,
-    materialize: str = "local",
+def _components_star(
+    proj: DataFrame, max_iterations: int, materialize: str
 ) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) → (doc, component), component = MIN reachable id.
+    """Connected components of the ``(s, d)`` pair projection via
+    alternating large-star / small-star contraction (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14) → (doc,
+    component), component = MIN reachable id.
 
-    Converges in O(log n) rounds on ANY graph shape — the alternative to
-    ``connected_components`` (min-label propagation, O(diameter) rounds)
-    for adversarial long-chain graphs. Per round: two groupBy-min +
-    two joins, all shuffling on node id; edge set never grows beyond the
-    input (stars only shrink it).
+    Converges in O(log n) rounds on ANY graph shape, adversarial long
+    chains included. Per round: two groupBy-min + two joins, all
+    shuffling on node id; the edge set never grows beyond the input
+    (stars only shrink it).
 
     - large-star: every node's neighbors LARGER than it re-attach to the
       minimum of its neighborhood (incl. itself);
     - small-star: edges are directed larger→smaller; each node and its
       smaller neighbors re-attach to the neighborhood minimum.
-
-    ``stats``: optional dict; receives {"rounds": n} for observability
-    (the chain-graph test asserts the O(log n) bound through it).
-    ``materialize``: ``local`` | ``reliable`` — per-round lineage cut
-    mode (operators/materialize.py); the truncation itself is mandatory
-    here, only its fault-tolerance is a knob.
     """
-    edges = pairs.select(F.col(src_col).alias("u"), F.col(dst_col).alias("v"))
-    cur = _materialize(
-        edges.filter(F.col("u") != F.col("v")).distinct(), materialize
+    edges = _materialize(
+        proj.select(F.col("s").alias("u"), F.col("d").alias("v")).distinct(),
+        materialize,
     )
-    rounds = 0
+    # the contraction drops self-pairs (x, x); a node whose only pair is
+    # one is its own component, added back from ``edges`` at the end
+    cur = edges.filter(F.col("u") != F.col("v"))
+    n_cur = cur.count()
     for _ in range(max_iterations):
-        rounds += 1
         # large-star
         sym = cur.unionAll(
             cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
@@ -1470,26 +1415,28 @@ def connected_components_twophase(
             eager=False,
         )
         # converged when the (distinct) edge set is unchanged: same size
-        # and nothing in new that wasn't in cur
+        # and nothing in new that wasn't in cur. cur is last round's
+        # new, so its size is last round's count — no second count job
         n_new = new.count()
-        if n_new == cur.count() and new.exceptAll(cur).isEmpty():
+        if n_new == n_cur and new.exceptAll(cur).isEmpty():
             cur = new
             break
-        cur = new
+        cur, n_cur = new, n_new
     else:
-        # O(log n) convergence means this never fires legitimately —
-        # returning the unconverged labeling would be silently wrong
+        # returning the unconverged labeling would silently split one
+        # real component into many
         raise RuntimeError(
-            f"connected_components_twophase did not converge in "
-            f"{max_iterations} rounds"
+            f"connected_components did not converge in {max_iterations} "
+            "rounds"
         )
-    if stats is not None:
-        stats["rounds"] = rounds
-    roots = cur.select(F.col("v").alias("u"), F.col("v")).distinct()
+    # converged: cur is a set of stars, every non-root node → its root
+    # once. min() folds the self-pair rows of nodes that also have
+    # other pairs into their component.
     return (
-        cur.unionAll(roots)
-        .distinct()
-        .select(F.col("u").alias("doc"), F.col("v").alias("component"))
+        cur.unionAll(cur.select(F.col("v").alias("u"), F.col("v")))
+        .unionAll(edges.filter(F.col("u") == F.col("v")))
+        .groupBy(F.col("u").alias("doc"))
+        .agg(F.min("v").alias("component"))
     )
 
 
@@ -1498,11 +1445,11 @@ def _components_driver_local(
 ) -> DataFrame:
     """Union-find over a COLLECTED pair list → (doc, component) with
     component = MIN reachable id — exactly the fixpoint the distributed
-    min-label loop converges to, computed in one pass. Union is
+    star contraction converges to, computed in one pass. Union is
     symmetric and idempotent, so the raw pair rows work directly: no
     symmetrization, dedup or distinct of the edge set is needed first
     (r16: the fast path reads the materialized pair projection and
-    skips the symmetrize+distinct shuffle and the loop entirely). Only
+    skips the edge-set shuffle and the loop entirely). Only
     called for pair sets under ``driver_max_edges`` (the caller bounds
     the collect), the same small-side-collapses-to-one-node reasoning
     as a broadcast join."""
@@ -1551,46 +1498,44 @@ def connected_components(
     pairs: DataFrame,
     src_col: str = "doc_a",
     dst_col: str = "doc_b",
-    max_iterations: int = 20,
+    max_iterations: int = 50,
     materialize: str = "local",
     driver_max_edges: int | None = COMPONENTS_DRIVER_MAX_EDGES,
 ) -> DataFrame:
     """Connected components over a candidate-pair graph → (doc,
     component), component = MIN doc id reachable. The step real dedup
     pipelines run after pair generation: a near-dup CLUSTER keeps one
-    canonical doc.
+    canonical doc. A self-pair ``(x, x)`` makes ``x`` a node, so a doc
+    whose only pair is one is its own component.
 
-    Algorithm: iterative min-label propagation. Each round every node
-    takes min(own label, neighbors' labels); converges in O(graph
-    diameter) rounds (near-dup clusters are small and dense, so 2-4
-    rounds in practice — the loop exits early on a converged round via
-    one cheap count per iteration). Each round is one join + one
-    aggregate, both shuffling on node id; labels are materialized each
-    round (``materialize=``: ``local`` | ``reliable``, see operators/
-    materialize.py) so the lineage (and its re-execution) doesn't grow
-    per round.
+    Algorithm: large-star / small-star contraction (see
+    :func:`_components_star`), O(log n) rounds on any graph shape. Each
+    round's edge set is materialized (``materialize=``: ``local`` |
+    ``reliable``, see operators/materialize.py) so the lineage (and its
+    re-execution) doesn't grow per round. ``max_iterations`` bounds the
+    rounds; an unconverged run raises ``RuntimeError`` rather than
+    return a split labeling.
 
     Deterministic: min() over ids, no ordering sensitivity.
 
     ``driver_max_edges`` (r16): when the pair set is at or under this
     row count, the components are computed with one driver-local
-    union-find over the collected pairs instead of the iterative join
+    union-find over the collected pairs instead of the distributed
     loop — identical output (component = MIN reachable id; union is
     symmetric and idempotent, so the raw pairs need no symmetrization
     or distinct first). The 2-column pair projection is materialized
     ONCE and both regimes read it: the gate is a bounded
     ``limit(n+1).collect()`` against the pinned blocks, the fast path
     union-finds those collected rows, and the big-graph path derives
-    the symmetric edge set from the same checkpoint — so the upstream
-    pair pipeline is computed exactly once either way (never re-run
-    for the gate), while the small graph skips the symmetrize+distinct
-    shuffle, the gate count and the O(diameter) join+count rounds —
-    all pure scheduling overhead there (measured: the registry's
-    256-pair graph spent ~1.6 s in loop rounds and another ~0.4 s in
-    edge-set materialization + gate jobs). The cost above the bound is
-    the pair-projection checkpoint itself (~16 bytes/row before the
-    ~2x-larger symmetric edge set replaces it) plus one cheap bounded
-    read. Pass ``None`` to force the loop with no extra
+    its edge set from the same checkpoint — so the upstream pair
+    pipeline is computed exactly once either way (never re-run for the
+    gate), while the small graph skips the edge-set shuffle and the
+    join+count rounds — all pure scheduling overhead there (measured:
+    the registry's 256-pair graph spent ~1.6 s in loop rounds and
+    another ~0.4 s in edge-set materialization + gate jobs). The cost
+    above the bound is the pair-projection checkpoint itself (~16
+    bytes/row before the distinct edge set replaces it) plus one cheap
+    bounded read. Pass ``None`` to force the loop with no extra
     materialization (the executor-loss harness does: its scenarios
     test the loop's fault behavior).
     """
@@ -1600,10 +1545,10 @@ def connected_components(
         rows = proj.limit(driver_max_edges + 1).collect()
         if len(rows) <= driver_max_edges:
             # id type = the WIDENED type of src ∪ dst — exactly what the
-            # distributed loop's symmetrize union produces, so the two
-            # regimes return identical schemas even for mixed-width id
-            # columns (int src vs bigint dst; r16 advice). Driver-only
-            # schema analysis, no job.
+            # distributed loop's unions produce, so the two regimes
+            # return identical schemas even for mixed-width id columns
+            # (int src vs bigint dst; r16 advice). Driver-only schema
+            # analysis, no job.
             widened = (
                 proj.select(F.col("s").alias("x"))
                 .unionAll(proj.select(F.col("d").alias("x")))
@@ -1613,59 +1558,7 @@ def connected_components(
             return _components_driver_local(
                 rows, pairs.sparkSession, widened
             )
-    edges = _materialize(
-        proj.unionAll(
-            proj.select(F.col("d").alias("s"), F.col("s").alias("d"))
-        ).distinct(),
-        materialize,
-    )
-    labels = _materialize(
-        edges.select(F.col("s").alias("doc"))
-        .distinct()
-        .withColumn("label", F.col("doc")),
-        materialize,
-        # lazy: the first round's join realizes it — one fewer eager
-        # job per build (r16); edges above stays eager because BOTH the
-        # label init and every round's join read it
-        eager=False,
-    )
-    for _ in range(max_iterations):
-        neighbor_min = (
-            edges.join(labels, edges.s == labels.doc)
-            .groupBy(F.col("d").alias("doc2"))
-            .agg(F.min("label").alias("nmin"))
-        )
-        # carry the previous label through the merge: one join computes
-        # the new label AND the convergence delta (no second join, no
-        # separate materialization job — the count() realizes the lazy
-        # checkpoint)
-        merged = _materialize(
-            labels.join(neighbor_min, labels.doc == F.col("doc2"), "left")
-            .select(
-                "doc",
-                F.col("label").alias("__old"),
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))
-                ).alias("label"),
-            ),
-            materialize,
-            eager=False,
-        )
-        changed = merged.filter(F.col("label") != F.col("__old")).count()
-        labels = merged.select("doc", "label")
-        if changed == 0:
-            break
-    else:
-        # O(diameter) didn't fit the budget (adversarial long-path
-        # component). Returning the partial labeling would silently split
-        # one real component into many — fail loudly and point at the
-        # O(log n) variant, same contract as connected_components_twophase.
-        raise RuntimeError(
-            f"connected_components (min-label) did not converge in "
-            f"{max_iterations} rounds — graph diameter exceeds the budget; "
-            "use connected_components_twophase for long-chain graphs"
-        )
-    return labels.select(F.col("doc"), F.col("label").alias("component"))
+    return _components_star(proj, max_iterations, materialize)
 
 
 # ---- incremental EXACT dedup (digest index + probe) ----

@@ -28,12 +28,10 @@ from .. import fsutil
 
 def read(spark, path: str, name: str) -> dict:
     """The sidecar ``name`` of the index at ``path``. Finishes a crashed
-    ``compact_index`` first (see ``dedup._recover_precompact``), so a
-    read never reports an index missing that sits whole at its backup
-    path. Raises ``ValueError`` when the sidecar is absent or corrupt."""
-    from .dedup import _recover_precompact
-
-    _recover_precompact(spark, path)
+    ``compact_index`` first (see ``fsutil.recover_swap``), so a read
+    never reports an index missing that sits whole at its backup path.
+    Raises ``ValueError`` when the sidecar is absent or corrupt."""
+    fsutil.recover_swap(spark, path)
     try:
         return json.loads(fsutil.read_text(spark, f"{path}/{name}"))
     except FileNotFoundError:
@@ -59,14 +57,12 @@ def ensure(spark, path: str, name: str, meta: dict, validate) -> None:
     """Write ``meta`` iff the sidecar is absent; otherwise call
     ``validate(stored_meta)``, which raises on a mismatch. A stream's
     wiring must not blindly rewrite: a restart with drifted parameters
-    would stamp them over the index they corrupt. Recovery runs FIRST:
-    writing the sidecar of an index parked at ``<path>.precompact``
-    would recreate the canonical dir holding only the sidecar, and the
-    next compaction would then delete the backup — the only full copy —
-    as stale."""
-    from .dedup import _recover_precompact
-
-    _recover_precompact(spark, path)
+    would stamp them over the index they corrupt. Recovery
+    (``fsutil.recover_swap``) runs FIRST: writing the sidecar of an
+    index parked at its backup path would recreate the canonical dir
+    holding only the sidecar, and the next compaction would then delete
+    the backup — the only full copy — as stale."""
+    fsutil.recover_swap(spark, path)
     if fsutil.exists(spark, f"{path}/{name}"):
         validate(read(spark, path, name))
     else:

@@ -19,18 +19,21 @@ from __future__ import annotations
 
 import re
 from functools import lru_cache
+from types import MappingProxyType
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# deterministic marker vocabularies for the language-ID heuristic
-LANG_MARKERS: dict[str, list[str]] = {
-    "en": ["the", "a", "value", "row"],
-    "de": ["der", "und", "nicht", "table"],
-    "fr": ["le", "et", "pas", "join"],
-    "es": ["el", "que", "los", "query"],
-    "zh": ["de5", "shi4", "bu4", "merge"],
-}
+# deterministic marker vocabularies for the language-ID heuristic;
+# read-only, so the memoized lang tree (_predicted_lang_named) can never
+# drift from the table
+LANG_MARKERS = MappingProxyType({
+    "en": ("the", "a", "value", "row"),
+    "de": ("der", "und", "nicht", "table"),
+    "fr": ("le", "et", "pas", "join"),
+    "es": ("el", "que", "los", "query"),
+    "zh": ("de5", "shi4", "bu4", "merge"),
+})
 
 
 def words(text: Column | str) -> Column:
@@ -82,10 +85,11 @@ def lang_scores_from_words(ws: Column) -> dict[str, Column]:
     """Marker-word hit count per language over a pre-split words array
     (n-gram heuristic simplified to unigram markers — the structure
     generalizes to char n-grams)."""
-    def marker_count(markers: list[str]) -> Column:
+    def marker_count(markers: tuple[str, ...]) -> Column:
         # NB: the lambda must be unary — F.filter inspects arity and
-        # would pass the element index into a second parameter
-        return F.size(F.filter(ws, lambda w: w.isin(markers))).cast("long")
+        # would pass the element index into a second parameter. isin
+        # unpacks a list, not a tuple.
+        return F.size(F.filter(ws, lambda w: w.isin(list(markers)))).cast("long")
 
     return {lang: marker_count(ms) for lang, ms in LANG_MARKERS.items()}
 
@@ -94,7 +98,7 @@ def lang_scores(text: Column | str) -> dict[str, Column]:
     return lang_scores_from_words(words(text))
 
 
-def _marker_regex(markers: list[str]) -> str:
+def _marker_regex(markers: tuple[str, ...]) -> str:
     """Regex counting space-delimited tokens equal to any marker —
     identical counts to filtering ``split(text, ' ')`` by membership
     (the trailing delimiter is a lookahead, so consecutive marker

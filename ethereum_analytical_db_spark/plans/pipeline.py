@@ -418,7 +418,7 @@ def simhash_near_dups_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lang_score_sql(markers: list[str]) -> str:
+def _lang_score_sql(markers: tuple[str, ...]) -> str:
     ms = ", ".join(f"'{w}'" for w in markers)
     return f"len(list_filter(string_split(text, ' '), w -> w IN ({ms})))"
 
@@ -1200,9 +1200,9 @@ SELECT doc, MIN(r) AS component FROM reach GROUP BY doc
 @register(
     "dedup_components",
     COMPONENTS_ORACLE,
-    note="near-dup clustering: connected components (iterative min-label "
-    "propagation, converges in O(diameter) joins) over the exact Jaccard "
-    "pair graph — the canonical-doc selection step real dedup pipelines "
+    note="near-dup clustering: connected components (driver-local "
+    "union-find up to 2M pairs, O(log n) large-star/small-star "
+    "contraction above) over the exact Jaccard pair graph — the canonical-doc selection step real dedup pipelines "
     "run after pair generation; oracle is a recursive-CTE closure; the "
     f"pair graph uses the df <= {MAX_SHINGLE_DF} stop-shingle cap",
 )

@@ -147,8 +147,8 @@ def near_dedup_stream(
     file-set forever — the small-files death at a batch per minute).
     Keyed on ``batch_id % N`` so the cadence is restart-stable; the fold
     runs AFTER the batch's own index write and is crash-safe (the
-    ``.precompact`` swap, with recovery wired into every index entry
-    point), and probe results are byte-identical before and after
+    ``fsutil.replace_dir`` swap, with recovery wired into every index
+    entry point), and probe results are byte-identical before and after
     (pinned in tests). The pairs output folds on the same cadence into
     GENERATIONS (``operators/dedup.fold_pairs_gens``): pairs land under
     engine-owned ``gen=b<id>`` partition dirs with ``batch`` preserved
@@ -358,14 +358,14 @@ def near_dedup_stream(
         batch_df.persist()
         try:
             # finish any crashed compaction FIRST: a pairs (or index)
-            # dir parked at .precompact would otherwise be shadowed by
-            # this batch's write recreating the canonical path, and the
+            # dir parked at its backup path would otherwise be shadowed
+            # by this batch's write recreating the canonical path, and the
             # next compaction would delete the backup as stale —
             # destroying the only full copy (same window the index meta
             # entry points guard; the pairs path has no meta check, so
             # the recovery lives here)
-            d._recover_precompact(spark, pairs_path)
-            d._recover_precompact(spark, index_path)
+            fsutil.recover_swap(spark, pairs_path)
+            fsutil.recover_swap(spark, index_path)
             d._recover_pair_fold(spark, pairs_path)
 
             # replay/retry hygiene: drop batch dirs / pair generations

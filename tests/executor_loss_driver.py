@@ -18,9 +18,10 @@ Three scenarios, markers on stdout for the pytest wrapper:
    (localCheckpoint blocks died with the executors and there is no
    lineage left to recompute from).
 2. CC_LOCAL: connected_components(materialize="local") on a
-   diameter-11 graph with all executors SIGKILLed mid-iteration (after
-   ≥5 jobs of its job group) — must raise: the edges' localCheckpoint
-   blocks are consulted every round.
+   diameter-11 graph, forced onto the distributed star-contraction
+   loop, with all executors SIGKILLed mid-iteration (after ≥5 jobs of
+   its job group) — must raise: every round reads the previous round's
+   localCheckpoint blocks.
 3. CC_RELIABLE: same graph, same mid-iteration kill,
    materialize="reliable" — must complete AND match the exact
    union-find answer computed driver-side, with the kill timestamped
@@ -105,9 +106,9 @@ def main(tmp: str) -> int:
     except Exception as e:  # noqa: BLE001 - any job failure is the point
         print(f"PRIMITIVE_LOCAL_FAILED {type(e).__name__}")
 
-    # --- the CC workload: 2000 chains of 12 nodes (diameter 11) so the
-    # min-label loop runs ~12 iterations = plenty of mid-run runway;
-    # component of every node is its chain head ---
+    # --- the CC workload: 2000 chains of 12 nodes (diameter 11): several
+    # star-contraction rounds, each a few jobs = plenty of mid-run
+    # runway; component of every node is its chain head ---
     chains, length = 2000, 12
     edges = spark.range(0, chains * (length - 1), 1, 8).selectExpr(
         f"cast(id / {length - 1} as long) * 1000 + (id % {length - 1}) as doc_a",

@@ -239,11 +239,44 @@ def test_compact_crash_between_renames_recovers(spark, tmp_path):
     assert not os.path.isdir(p + ".precompact")
 
 
+def test_compact_restores_table_when_second_rename_fails(
+    spark, tmp_path, monkeypatch
+):
+    """Hadoop rename reports failure by returning false. When compact()'s
+    second rename (tmp -> canonical) fails, the backup must be renamed
+    back before the error surfaces: the canonical dir exists the moment
+    compact() raises, with no recovery entry point needed, and holds
+    the pre-compact rows."""
+    import os
+
+    from ethereum_analytical_db_spark import fsutil
+
+    wh = Warehouse(spark, str(tmp_path))
+    wh.create("block")
+    for i in range(2):
+        wh.write("block", spark.createDataFrame([Row(id="1", number=i)]))
+    p = str(tmp_path / "block")
+    want = sorted(r["number"] for r in wh.read("block", final=False).collect())
+    real = fsutil.rename
+    monkeypatch.setattr(
+        fsutil,
+        "rename",
+        lambda s, src, dst: False if src.endswith(".compact") else real(s, src, dst),
+    )
+    with pytest.raises(IOError, match="restored"):
+        wh.compact("block")
+    assert os.path.isdir(p)
+    assert not os.path.exists(p + ".precompact")
+    monkeypatch.setattr(fsutil, "rename", real)
+    got = sorted(r["number"] for r in wh.read("block", final=False).collect())
+    assert got == want == [0, 1]
+
+
 def test_drop_removes_leftovers_before_canonical(spark, tmp_path, monkeypatch):
     """drop() must delete '.precompact'/'.compact' BEFORE the canonical
     path: a crash between the two deletes in the other order leaves
     (.precompact alive, canonical gone) — exactly the state
-    _recover_precompact treats as a mid-compact crash, resurrecting the
+    fsutil.recover_swap treats as a mid-compact crash, resurrecting the
     dropped table on the next exists()/read()."""
     import shutil as _shutil
 

@@ -234,32 +234,34 @@ def test_connected_components_hand_graph(spark):
         for r in dedup.connected_components(pairs).collect()
     }
     assert got == expect
-    # the two-phase implementation agrees on the same graph
+    # the distributed star-contraction path agrees on the same graph
     got2 = {
         (r["doc"], r["component"])
-        for r in dedup.connected_components_twophase(pairs).collect()
+        for r in dedup.connected_components(
+            pairs, driver_max_edges=None
+        ).collect()
     }
     assert got2 == expect
 
 
-def test_twophase_chain_converges_in_log_rounds(spark):
-    """A 64-node chain is the adversarial case for min-label propagation
+def test_connected_components_chain_converges_in_log_rounds(spark):
+    """A 64-node chain is the adversarial case for label propagation
     (O(diameter) = 63 rounds); large-star/small-star contracts it in
-    O(log n) rounds."""
+    O(log n) rounds, well inside a 12-round budget."""
     n = 64
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    stats: dict = {}
     out = {
         (r["doc"], r["component"])
-        for r in dedup.connected_components_twophase(pairs, stats=stats).collect()
+        for r in dedup.connected_components(
+            pairs, driver_max_edges=None, max_iterations=12
+        ).collect()
     }
     assert out == {(i, 0) for i in range(n)}
-    assert stats["rounds"] <= 12, stats
 
 
-def test_twophase_raises_when_unconverged(spark):
+def test_connected_components_raises_when_unconverged(spark):
     """Exhausting max_iterations without the fixed point must raise, not
     return a plausible-but-wrong labeling."""
     import pytest
@@ -268,14 +270,17 @@ def test_twophase_raises_when_unconverged(spark):
         [(i, i + 1) for i in range(15)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components_twophase(pairs, max_iterations=1)
+        dedup.connected_components(
+            pairs, max_iterations=1, driver_max_edges=None
+        )
 
 
 def test_connected_components_random_graph_agreement(spark):
-    """Both implementations label every node with the MIN reachable id,
-    so on ANY graph their outputs must be identical — checked on seeded
-    random graphs with mixed shapes (isolated pairs, chains, cliques,
-    a high-degree star) and against a pure-Python union-find oracle."""
+    """Both paths (driver union-find, distributed star contraction)
+    label every node with the MIN reachable id, so on ANY graph their
+    outputs must be identical — checked on seeded random graphs with
+    mixed shapes (isolated pairs, chains, cliques, a high-degree star,
+    self-pairs) against a pure-Python union-find oracle."""
     import random
 
     for seed in (11, 23):
@@ -286,8 +291,9 @@ def test_connected_components_random_graph_agreement(spark):
             a, b = rnd.sample(nodes, 2)
             edges.add((min(a, b), max(a, b)))
         edges.add((0, 59))  # long-range edge
+        edges.update((n, n) for n in rnd.sample(range(70), 6))  # self-pairs
 
-        parent = {n: n for n in nodes}
+        parent = {n: n for n in range(70)}
 
         def find(x):
             while parent[x] != x:
@@ -305,38 +311,44 @@ def test_connected_components_random_graph_agreement(spark):
         pairs = spark.createDataFrame(
             sorted(edges), "doc_a long, doc_b long"
         )
-        got_minlabel = {
+        got_driver = {
             (r["doc"], r["component"])
             for r in dedup.connected_components(pairs).collect()
         }
         got_star = {
             (r["doc"], r["component"])
-            for r in dedup.connected_components_twophase(pairs).collect()
+            for r in dedup.connected_components(
+                pairs, driver_max_edges=None
+            ).collect()
         }
-        assert got_minlabel == want, f"min-label differs (seed {seed})"
-        assert got_star == want, f"two-phase differs (seed {seed})"
+        assert got_driver == want, f"driver path differs (seed {seed})"
+        assert got_star == want, f"star contraction differs (seed {seed})"
 
 
 def test_connected_components_driver_fast_path_matches_loop(spark):
     """r16: small edge sets take a driver-local union-find instead of
-    the iterative join loop. Same (doc, component) rows, same schema —
+    the distributed loop. Same (doc, component) rows, same schema —
     pinned against the loop forced via driver_max_edges=None on a graph
-    with chains, a clique, an isolated pair and duplicate input pairs."""
+    with chains, a clique, an isolated pair, duplicate input pairs and
+    self-pairs (a node whose only pair is (x, x) is its own component),
+    and on an int/bigint id frame (the widened type on both paths)."""
     raw = [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21), (21, 22), (20, 22),
-           (2, 1), (50, 51)]
-    pairs = spark.createDataFrame(raw, "doc_a long, doc_b long")
-    fast = dedup.connected_components(pairs)  # default: fast path
-    loop = dedup.connected_components(pairs, driver_max_edges=None)
-    assert fast.schema == loop.schema
-    assert {tuple(r) for r in fast.collect()} == {
-        tuple(r) for r in loop.collect()
-    }
-    # threshold boundary: a bound below the edge count takes the loop
-    # (no collect), still identical rows
-    loop2 = dedup.connected_components(pairs, driver_max_edges=1)
-    assert {tuple(r) for r in loop2.collect()} == {
-        tuple(r) for r in fast.collect()
-    }
+           (2, 1), (50, 51), (5, 5), (5, 6), (7, 7)]
+    for ddl in ("doc_a long, doc_b long", "doc_a int, doc_b bigint"):
+        pairs = spark.createDataFrame(raw, ddl)
+        fast = dedup.connected_components(pairs)  # default: fast path
+        loop = dedup.connected_components(pairs, driver_max_edges=None)
+        assert fast.schema == loop.schema
+        assert {tuple(r) for r in fast.collect()} == {
+            tuple(r) for r in loop.collect()
+        }
+        assert {(7, 7), (5, 5), (6, 5)} <= {tuple(r) for r in loop.collect()}
+        # threshold boundary: a bound below the edge count takes the
+        # loop (no collect), still identical rows
+        loop2 = dedup.connected_components(pairs, driver_max_edges=1)
+        assert {tuple(r) for r in loop2.collect()} == {
+            tuple(r) for r in fast.collect()
+        }
 
 
 # ---- exact substring dedup (Lee et al. 2022 semantics) ----
@@ -541,24 +553,17 @@ def test_reliable_materialize_uses_checkpoint_dir_and_matches_local(spark, tmp_p
         for f in fn
     ]
     assert files, "reliable mode produced no checkpoint files"
-    # components in reliable mode: the iterative path (per-round cuts)
+    # components in reliable mode: the distributed path (per-round cuts)
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "doc_a long, doc_b long"
     )
     got = {
         (r["doc"], r["component"])
         for r in dedup.connected_components(
-            edges, materialize="reliable"
+            edges, materialize="reliable", driver_max_edges=None
         ).collect()
     }
     assert got == {(1, 1), (2, 1), (3, 1), (10, 10), (11, 10)}
-    got2 = {
-        (r["doc"], r["component"])
-        for r in dedup.connected_components_twophase(
-            edges, materialize="reliable"
-        ).collect()
-    }
-    assert got2 == got
     # unknown mode fails loudly at the knob, not deep in Spark
     with pytest.raises(ValueError, match="materialize mode"):
         materialize(df, "fast-and-loose")

@@ -54,8 +54,8 @@ def test_sessionize_hot_key_half_of_events(spark):
 
 def test_giant_component_min_label_converges_low_diameter(spark):
     """A single component holding EVERY node (hub-and-spoke with local
-    chains: diameter 6) — min-label stays within its O(diameter) budget
-    and labels all 4000 nodes with the global minimum."""
+    chains: diameter 6) — the distributed path stays within a 10-round
+    budget and labels all 4000 nodes with the global minimum."""
     edges = []
     # 40 hubs, each with a 3-deep chain of 33 spokes
     n = 0
@@ -68,34 +68,27 @@ def test_giant_component_min_label_converges_low_diameter(spark):
             n += 3
             edges += [(hub_id, a), (a, b), (b, c)]
     pairs = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = dedup.connected_components(pairs, max_iterations=10).collect()
+    got = dedup.connected_components(
+        pairs, max_iterations=10, driver_max_edges=None
+    ).collect()
     assert len(got) == n
     assert all(r["component"] == 0 for r in got)
 
 
-def test_giant_chain_min_label_raises_twophase_succeeds(spark):
-    """Adversarial 600-node path graph (diameter 600): min-label must
-    refuse to return a silently-split labeling when the diameter
-    exceeds its round budget; the O(log n) two-phase variant labels the
-    same graph in a handful of rounds."""
+def test_giant_chain_converges_in_log_rounds(spark):
+    """Adversarial 600-node path graph (diameter 600): both paths label
+    it as one component; the distributed star contraction does so
+    within 12 rounds (O(log n), not O(diameter))."""
     chain = [(i, i + 1) for i in range(600)]
     pairs = spark.createDataFrame(chain, "doc_a long, doc_b long")
     # driver_max_edges=None forces the distributed loop: the r16 driver
-    # fast path labels a small chain in one pass (no rounds to exhaust),
-    # and this test exists to pin the LOOP's refuse-to-split contract
-    with pytest.raises(RuntimeError, match="did not converge"):
-        dedup.connected_components(
-            pairs, max_iterations=8, driver_max_edges=None
-        )
-    # the fast path itself labels the same chain correctly
-    fast = dedup.connected_components(pairs, max_iterations=8).collect()
-    assert len(fast) == 601 and all(r["component"] == 0 for r in fast)
-    stats: dict = {}
-    got = dedup.connected_components_twophase(
-        pairs, max_iterations=50, stats=stats
+    # fast path labels a small chain in one pass, with no rounds
+    got = dedup.connected_components(
+        pairs, max_iterations=12, driver_max_edges=None
     ).collect()
     assert len(got) == 601 and all(r["component"] == 0 for r in got)
-    assert stats["rounds"] <= 12  # O(log n), not O(diameter)
+    fast = dedup.connected_components(pairs, max_iterations=12).collect()
+    assert len(fast) == 601 and all(r["component"] == 0 for r in fast)
 
 
 def test_lsh_identical_vectors_one_bucket_sub_blocks_bound(spark):

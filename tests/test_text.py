@@ -122,3 +122,21 @@ def test_memoized_lang_expr_matches_fresh_tree(spark):
     want_b = {r[0]: r[1] for r in b.select("doc_id", fresh.alias("l")).collect()}
     assert got_a == want_a == {1: "en", 2: "de"}
     assert got_b == want_b == {3: "fr", 4: "es"}
+
+
+def test_lang_markers_read_only(spark):
+    """The memoized lang tree is built from LANG_MARKERS once per
+    process, so the table must not be mutable: a change would reach the
+    fresh-tree builds but not the memo. The array form (isin over the
+    split words) still scores the tuple markers."""
+    import pytest
+
+    with pytest.raises(TypeError):
+        text.LANG_MARKERS["xx"] = ("foo",)
+    with pytest.raises(TypeError):
+        text.LANG_MARKERS["en"][0] = "foo"
+    scores = text.lang_scores("text")
+    row = spark.createDataFrame([("the a der row",)], "text string").select(
+        *[c.alias(lang) for lang, c in scores.items()]
+    ).first()
+    assert row.asDict() == {"en": 3, "de": 1, "fr": 0, "es": 0, "zh": 0}
