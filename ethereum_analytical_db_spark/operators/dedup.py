@@ -311,6 +311,62 @@ def ngram_jaccard_pairs(
     )
 
 
+def _require_divisible(lanes: int, lanes_name: str, groups: int, groups_name: str) -> None:
+    """The divisibility guard of the banded/chunked signatures: lanes
+    past the last full group would be paid for but never reach any
+    candidate key, silently changing the recall curve."""
+    if lanes % groups:
+        raise ValueError(
+            f"{groups_name}={groups} must divide {lanes_name}={lanes}: the "
+            f"trailing {lanes % groups} lanes would be paid for but never "
+            "influence any candidate key"
+        )
+
+
+def _require_pigeonhole(max_hamming: int, blocks: int, partial_recall: bool) -> None:
+    """The SimHash recall guard: a pair within Hamming distance d shares
+    an exact chunk only when d < blocks."""
+    if max_hamming >= blocks and not partial_recall:
+        raise ValueError(
+            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
+            "block-permutation recall guarantee (a pair can differ in "
+            "every chunk); raise blocks past max_hamming or pass "
+            "partial_recall=True to accept the heuristic"
+        )
+
+
+def _min_lanes(
+    df: DataFrame, text_col: str, id_col: str, n: int, lanes: list[str]
+) -> DataFrame:
+    """``(doc, signature)``: one array element per ``lanes`` entry, each
+    an aggregate SQL over the doc's shingles ``s`` — K aggregation lanes
+    with map-side partial combine (each partition collapses to one row
+    per doc before the shuffle)."""
+    ex = _shingled(df, text_col, id_col, n).select(
+        "doc", F.explode("ngrams").alias("s")
+    )
+    # ALL lanes in one SQL string parsed JVM-side in a single expr call:
+    # num_hashes separate F.expr(...).alias(...) pairs were still
+    # 2·num_hashes py4j round trips per build (r16 driver-gap find)
+    return ex.groupBy("doc").agg(
+        F.expr(f"array({', '.join(lanes)})").alias("signature")
+    )
+
+
+def _band_rows(sigs: DataFrame, num_hashes: int, bands: int, bucket) -> DataFrame:
+    """``(doc, band, bucket)`` from ``num_hashes``-lane signatures:
+    ``bucket(first, r)`` is the SQL hashing lanes ``first .. first + r
+    - 1`` (0-based) into band ``first // r``'s bucket."""
+    _require_divisible(num_hashes, "num_hashes", bands, "bands")
+    r = num_hashes // bands
+    band_structs = ", ".join(
+        f"struct({b} AS band, {bucket(b * r, r)} AS bucket)" for b in range(bands)
+    )
+    return sigs.selectExpr(
+        "doc", f"explode(array({band_structs})) AS bb"
+    ).select("doc", "bb.band", "bb.bucket")
+
+
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -323,17 +379,11 @@ def minhash_signatures(
 
     Shape: explode shingles, then K ``min(xxhash64(s, k))`` aggregation
     lanes — whole-stage-codegen hash functions with map-side partial
-    combine (each partition collapses to one row per doc before the
-    shuffle), instead of K interpreted array-transform lambdas per row."""
-    shingled = _shingled(df, text_col, id_col, n)
-    ex = shingled.select("doc", F.explode("ngrams").alias("s"))
-    # ALL lanes in one SQL string parsed JVM-side in a single expr call:
-    # num_hashes separate F.expr(...).alias(...) pairs were still
-    # 2·num_hashes py4j round trips per build (r16 driver-gap find —
-    # one-shot construction halves warm build time on lane-heavy aggs);
-    # the aggregate functions and the array reassembly are unchanged
-    lanes = ", ".join(f"min(xxhash64(s, {k}))" for k in range(num_hashes))
-    return ex.groupBy("doc").agg(F.expr(f"array({lanes})").alias("signature"))
+    combine, instead of K interpreted array-transform lambdas per row."""
+    return _min_lanes(
+        df, text_col, id_col, n,
+        [f"min(xxhash64(s, {k}))" for k in range(num_hashes)],
+    )
 
 
 def minhash_band_rows(
@@ -352,42 +402,79 @@ def minhash_band_rows(
     corpus index (:func:`minhash_index_write`) exact w.r.t. a full
     recompute. This is also the candidate-join key layout
     :func:`minhash_lsh_candidates` self-joins on."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}: the "
-            f"trailing {num_hashes % bands} hash lanes would be paid for "
-            "but never influence any bucket, silently changing the LSH "
-            "S-curve"
-        )
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(df, text_col, id_col, n, num_hashes)
-    band_structs = ", ".join(
-        f"struct({b} AS band, xxhash64(array_join(transform("
-        f"slice(signature, {b * rows_per_band + 1}, {rows_per_band}), "
-        "x -> CAST(x AS STRING)), ',')) AS bucket)"
-        for b in range(bands)
+    return _band_rows(
+        minhash_signatures(df, text_col, id_col, n, num_hashes),
+        num_hashes,
+        bands,
+        lambda first, r: (
+            f"xxhash64(array_join(transform(slice(signature, {first + 1}, "
+            f"{r}), x -> CAST(x AS STRING)), ','))"
+        ),
     )
-    return sigs.selectExpr(
-        "doc", f"explode(array({band_structs})) AS bb"
-    ).select("doc", "bb.band", "bb.bucket")
 
 
-def _drop_hot_buckets(band_rows: DataFrame, max_bucket_df: int) -> DataFrame:
-    """Remove band rows whose (band, bucket) is shared by more than
-    ``max_bucket_df`` docs — the MinHash analogue of SimHash's
-    ``max_chunk_df`` and the Jaccard ``max_shingle_df``: a degenerate
-    bucket (boilerplate-dominated corpus, near-constant field) makes
-    the candidate join O(bucket²), and at 100 TB that single bucket is
-    the job. A pair is lost only if EVERY band it agrees on is hot —
-    both docs sitting entirely inside degenerate clusters (subset
-    property, pinned in tests)."""
-    hot = (
-        band_rows.groupBy("band", "bucket")
+def _cap_hot_keys(
+    frames: list[DataFrame], keys: list[str], cap: int | None
+) -> list[DataFrame]:
+    """The hot-key cap of every approximate-dedup family (MinHash
+    ``max_bucket_df``, SimHash ``max_chunk_df``, the md5 hyperplane
+    face's ``max_bucket_size``): drop each frame's rows whose ``keys``
+    value is shared by more than ``cap`` rows of all ``frames``
+    together. A probe passes its index and its batch, so the count is
+    the corpus-wide one and the capped probe equals the capped batch
+    recompute. A degenerate key (boilerplate-dominated corpus,
+    near-constant field) makes the candidate join O(key_df²), and at
+    100 TB that single key is the job; a pair is lost only if EVERY key
+    it shares is hot (subset property, pinned in tests). The hot set —
+    at most rows/(cap+1) keys, in practice a handful — broadcasts into
+    the anti-joins, so no capped frame gains an Exchange (a probe's
+    index side stays shuffle-free). ``cap=None`` returns the frames
+    unchanged."""
+    if cap is None:
+        return frames
+    counted = frames[0].select(*keys)
+    for more in frames[1:]:
+        counted = counted.unionByName(more.select(*keys))
+    hot = F.broadcast(
+        counted.groupBy(*keys)
         .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_bucket_df)
+        .filter(F.col("df") > cap)
         .drop("df")
     )
-    return band_rows.join(hot, ["band", "bucket"], "left_anti")
+    return [f.join(hot, keys, "left_anti") for f in frames]
+
+
+def _self_join(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The keyed self-join of the banded/chunked candidate families:
+    ``A.key = B.key AND A.doc < B.doc`` over one materialized row set,
+    branches addressable as ``A.*``/``B.*``.
+
+    Renamed AFTER the join, not before (r16): identical un-renamed
+    branches canonicalize equal, so AQE's stage cache executes ONE key
+    shuffle and the second branch is a ``ReusedExchange`` (pinned by
+    test_self_join_branches_reuse_one_exchange). Merge, not
+    shuffle-hash: the row table is O(docs × keys per doc), and SMJ
+    spills under a hot key where SHJ's build side must fit in task
+    memory (the sf10 lesson of the n-gram join)."""
+    cond = F.col("A.doc") < F.col("B.doc")
+    for k in reversed(keys):
+        cond = (F.col(f"A.{k}") == F.col(f"B.{k}")) & cond
+    return rows.alias("A").hint("merge").join(rows.alias("B"), cond)
+
+
+def _band_candidates(
+    band_rows: DataFrame, materialize: str, max_bucket_df: int | None
+) -> DataFrame:
+    """Band rows → ``(doc_a, doc_b, bands_in_common)``: materialize (the
+    shingle + lane pipeline runs once, not once per join branch), cap
+    hot buckets, self-join per (band, bucket), count shared bands."""
+    band_rows = _materialize(band_rows, materialize)
+    [band_rows] = _cap_hot_keys([band_rows], ["band", "bucket"], max_bucket_df)
+    return (
+        _self_join(band_rows, ["band", "bucket"])
+        .groupBy(F.col("A.doc").alias("doc_a"), F.col("B.doc").alias("doc_b"))
+        .agg(F.count(F.lit(1)).alias("bands_in_common"))
+    )
 
 
 def minhash_lsh_candidates(
@@ -406,33 +493,12 @@ def minhash_lsh_candidates(
     bucket. Output: (doc_a, doc_b, bands_in_common).
 
     ``max_bucket_df``: optional hot-bucket cap (see
-    :func:`_drop_hot_buckets`); the default (None) keeps exact LSH
+    :func:`_cap_hot_keys`); the default (None) keeps exact LSH
     candidate semantics."""
-    band_rows = minhash_band_rows(df, text_col, id_col, n, num_hashes, bands)
-    # materialize before the self-join so the shingle+minhash pipeline
-    # runs once, not once per join branch
-    band_rows = _materialize(band_rows, materialize)
-    if max_bucket_df is not None:
-        band_rows = _drop_hot_buckets(band_rows, max_bucket_df)
-    # merge not shuffle-hash: same OOM hazard as the n-gram index join
-    # (the band table is O(docs x bands)); SMJ spills, SHJ's build side
-    # must fit in task memory. Branches renamed AFTER the join so they
-    # canonicalize equal and AQE reuses ONE (band, bucket) shuffle
-    # (r16, see ngram_jaccard_pairs)
-    a = band_rows.alias("A")
-    b = band_rows.alias("B")
-    return (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("A.band") == F.col("B.band"))
-            & (F.col("A.bucket") == F.col("B.bucket"))
-            & (F.col("A.doc") < F.col("B.doc")),
-        )
-        .groupBy(
-            F.col("A.doc").alias("doc_a"), F.col("B.doc").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("bands_in_common"))
+    return _band_candidates(
+        minhash_band_rows(df, text_col, id_col, n, num_hashes, bands),
+        materialize,
+        max_bucket_df,
     )
 
 
@@ -445,61 +511,26 @@ def minhash_lsh_candidates_md5(
     bands: int = 4,
     materialize: str = "local",
 ) -> DataFrame:
-    """Portable-hash twin of :func:`minhash_lsh_candidates`: the SAME
-    shingle → K-min signature → band → bucket self-join pipeline, keyed
-    by md5 (a hash family every SQL engine ships) instead of xxhash64.
-    Lane k's minimum is ``min(md5('k:' || shingle))`` over the doc's
-    distinct shingles (hex strings compare bytewise identically across
-    engines), band b's bucket is ``md5(lane_{b·r} || '|' || …)``.
-
-    Exists so the LSH family has an exactly-replayable SQL oracle face
-    (r12 VERDICT task 7 — the first hash-checked evidence on the
-    approximate-dedup tier); PRODUCTION keeps the xxhash64 pipeline,
-    whose 64-bit integer lanes beat 32-char hex strings across the
-    shuffle. Same banded scale shape: no all-pairs, cost is
-    Σ bucket_df² over bucket groups, map-side-combined min lanes."""
-    if num_hashes % bands:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}"
-        )
-    r = num_hashes // bands
-    sh = _shingled(df, text_col, id_col, n).select(
-        "doc", F.explode("ngrams").alias("s")
+    """:func:`minhash_lsh_candidates` keyed by md5, a hash family every
+    SQL engine ships, so the registry's DuckDB oracle replays it
+    exactly. Lane k's minimum is ``min(md5('k:' || shingle))`` over the
+    doc's distinct shingles (hex strings compare bytewise identically
+    across engines); band b's bucket is ``md5(lane_{b·r} || '|' || …)``.
+    No hot-bucket cap. Production keeps xxhash64, whose 64-bit integer
+    lanes beat 32-char hex strings across the shuffle."""
+    sigs = _min_lanes(
+        df, text_col, id_col, n,
+        [f"min(md5('{k}:' || s))" for k in range(num_hashes)],
     )
-    # one-shot lane construction (same py4j-round-trip cut as
-    # minhash_signatures); sig[k] is the 0-based lane the m{k} columns
-    # used to carry — identical min-md5 values, identical buckets
-    lanes = ", ".join(
-        f"min(md5('{k}:' || s))" for k in range(num_hashes)
+    band_rows = _band_rows(
+        sigs,
+        num_hashes,
+        bands,
+        lambda first, r: "md5(concat_ws('|', {}))".format(
+            ", ".join(f"signature[{k}]" for k in range(first, first + r))
+        ),
     )
-    mins = sh.groupBy("doc").agg(F.expr(f"array({lanes})").alias("sig"))
-    band_structs = ", ".join(
-        "struct({b} AS band, md5(concat_ws('|', {lanes})) AS bucket)".format(
-            b=b, lanes=", ".join(f"sig[{k}]" for k in range(b * r, (b + 1) * r))
-        )
-        for b in range(bands)
-    )
-    band_rows = mins.selectExpr(
-        "doc", f"explode(array({band_structs})) AS bb"
-    ).select("doc", "bb.band", "bb.bucket")
-    band_rows = _materialize(band_rows, materialize)
-    # rename after the join for AQE exchange reuse (r16, see
-    # minhash_lsh_candidates)
-    a = band_rows.alias("A")
-    b = band_rows.alias("B")
-    return (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("A.band") == F.col("B.band"))
-            & (F.col("A.bucket") == F.col("B.bucket"))
-            & (F.col("A.doc") < F.col("B.doc")),
-        )
-        .groupBy(
-            F.col("A.doc").alias("doc_a"), F.col("B.doc").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("bands_in_common"))
-    )
+    return _band_candidates(band_rows, materialize, None)
 
 
 _BAND_INDEX_META = "_band_index_meta.json"
@@ -937,50 +968,77 @@ def minhash_probe_candidates(
     _require_meta(
         spark, index_path, _BAND_INDEX_META, _band_meta(n, num_hashes, bands)
     )
-    new_rows = minhash_band_rows(new_df, text_col, id_col, n, num_hashes, bands)
-    # computed once, consumed by two join branches (index probe + batch
-    # self-join): cut lineage so the shingle+minhash pipeline runs once
-    new_rows = _materialize(new_rows, materialize)
-    idx = spark.read.parquet(index_path)
-    if index_filter is not None:
-        # e.g. exclude a retried micro-batch's own rows (a partition
-        # predicate on the streaming index's `batch` column — prunes
-        # directories, see streaming/dedupe_stream.near_dedup_stream)
-        idx = idx.filter(index_filter)
-    if max_bucket_df is not None:
-        hot = F.broadcast(
-            idx.select("band", "bucket")
-            .unionByName(new_rows.select("band", "bucket"))
-            .groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_bucket_df)
-            .drop("df")
-        )
-        idx = idx.join(hot, ["band", "bucket"], "left_anti")
-        new_rows = new_rows.join(hot, ["band", "bucket"], "left_anti")
-    probe = F.broadcast(new_rows) if broadcast_new else new_rows.hint("merge")
-    cross = (
-        idx.join(probe.withColumnRenamed("doc", "doc_new"), ["band", "bucket"])
-        .filter(F.col("doc") != F.col("doc_new"))
-        .select(
-            F.least("doc", "doc_new").alias("doc_a"),
-            F.greatest("doc", "doc_new").alias("doc_b"),
-        )
-    )
-    a = new_rows.select(F.col("doc").alias("doc_a"), "band", "bucket")
-    b = new_rows.select(F.col("doc").alias("doc_b"), "band", "bucket")
-    if not broadcast_new:
-        a = a.hint("merge")
-    within = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-    )
     return (
-        cross.unionByName(within)
+        _probe_candidates(
+            spark, index_path,
+            minhash_band_rows(new_df, text_col, id_col, n, num_hashes, bands),
+            ["band", "bucket"], [],
+            broadcast_new, index_filter, materialize, max_bucket_df,
+        )
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("bands_in_common"))
     )
+
+
+def _probe_candidates(
+    spark,
+    index_path: str,
+    new_rows: DataFrame,
+    keys: list[str],
+    carry: list[str],
+    broadcast_new: bool,
+    index_filter,
+    materialize: str,
+    cap: int | None,
+) -> DataFrame:
+    """The broadcast probe of the frozen-index families: candidate rows
+    ``(doc_a, doc_b, *carry, *<carry>_2)`` between a new batch's
+    per-doc ``new_rows`` and the index at ``index_path`` (sharing
+    ``keys``), plus pairs within the batch; one row per shared key, so
+    the face's result step aggregates. Each ``carry`` column arrives as
+    ``c`` and ``c_2``, the two docs' values in no fixed order (a
+    symmetric result step such as a Hamming distance does not care).
+
+    The batch rows are materialized once (they feed two join branches);
+    ``index_filter`` restricts the index scan (e.g. the stream's
+    strictly-earlier-batches partition predicate, which prunes
+    directories); ``cap`` is the hot-key cap over index ∪ batch
+    (:func:`_cap_hot_keys`). With ``broadcast_new`` the batch rows
+    broadcast to the index scan — a BroadcastHashJoin with zero
+    Exchange above the corpus-side Parquet scan, plan-asserted in
+    tests — otherwise both the probe and the within-batch self-join
+    fall back to sort-merge (a batch too large to broadcast; same SHJ
+    task-memory hazard as the batch forms)."""
+    new_rows = _materialize(new_rows, materialize)
+    idx = spark.read.parquet(index_path)
+    if index_filter is not None:
+        idx = idx.filter(index_filter)
+    idx, new_rows = _cap_hot_keys([idx, new_rows], keys, cap)
+
+    def side(rows: DataFrame, sfx: str) -> DataFrame:
+        return rows.select(*keys, *[F.col(c).alias(c + sfx) for c in ["doc", *carry]])
+
+    probe = side(new_rows, "_2")
+    probe = F.broadcast(probe) if broadcast_new else probe.hint("merge")
+    carried = [*carry, *[c + "_2" for c in carry]]
+    cross = (
+        idx.join(probe, keys)
+        .filter(F.col("doc") != F.col("doc_2"))
+        .select(
+            F.least("doc", "doc_2").alias("doc_a"),
+            F.greatest("doc", "doc_2").alias("doc_b"),
+            *carried,
+        )
+    )
+    a = side(new_rows, "")
+    if not broadcast_new:
+        a = a.hint("merge")
+    within = (
+        a.join(side(new_rows, "_2"), keys)
+        .filter(F.col("doc") < F.col("doc_2"))
+        .select(F.col("doc").alias("doc_a"), F.col("doc_2").alias("doc_b"), *carried)
+    )
+    return cross.unionByName(within)
 
 
 def simhash_signatures(
@@ -1013,38 +1071,6 @@ def simhash_signatures(
     return tokens.groupBy("doc").agg(F.expr(sig_sql).alias("simhash"))
 
 
-def _hamming_pairs(chunked: DataFrame, max_hamming: int) -> DataFrame:
-    """The block-permutation candidate join + full-signature Hamming
-    verify shared by the xxhash64 and md5 SimHash faces: self-join the
-    ``(doc, simhash, blk, chunk)`` rows per (blk, chunk), verify on
-    bit_count(xor), dedupe pairs that share several chunks."""
-    # rename after the join for AQE exchange reuse (r16, see
-    # ngram_jaccard_pairs); merge not shuffle-hash: spills under a hot
-    # chunk instead of OOMing the build-side hash map (sf10 lesson from
-    # the n-gram join)
-    a = chunked.alias("A")
-    b = chunked.alias("B")
-    hamming = F.bit_count(
-        F.col("A.simhash").bitwiseXOR(F.col("B.simhash"))
-    )
-    return (
-        a.hint("merge")
-        .join(
-            b,
-            (F.col("A.blk") == F.col("B.blk"))
-            & (F.col("A.chunk") == F.col("B.chunk"))
-            & (F.col("A.doc") < F.col("B.doc")),
-        )
-        .select(
-            F.col("A.doc").alias("doc_a"),
-            F.col("B.doc").alias("doc_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-
-
 def _chunked_signatures(sigs: DataFrame, blocks: int, bits: int = 64) -> DataFrame:
     """``(doc, simhash, blk, chunk)`` rows: the ``bits``-wide signature
     split into ``blocks`` bit chunks (the block-permutation candidate
@@ -1063,6 +1089,47 @@ def _chunked_signatures(sigs: DataFrame, blocks: int, bits: int = 64) -> DataFra
     ).select("doc", "simhash", "c.blk", "c.chunk")
 
 
+def simhash_chunk_rows(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    blocks: int = 4,
+) -> DataFrame:
+    """``(doc, simhash, blk, chunk)`` SimHash chunk rows — the SimHash
+    analogue of :func:`minhash_band_rows`: the 64-bit signature split
+    into ``blocks`` chunks, one row per (doc, chunk). The layout the
+    SimHash index stores and its probe joins on."""
+    return _chunked_signatures(simhash_signatures(df, text_col, id_col), blocks)
+
+
+def _simhash_pairs(
+    sigs: DataFrame,
+    bits: int,
+    blocks: int,
+    max_hamming: int,
+    max_chunk_df: int | None,
+    materialize: str,
+) -> DataFrame:
+    """``(doc, simhash)`` signatures → ``(doc_a, doc_b, hamming)``:
+    materialize the signatures (both join branches would otherwise
+    re-run the tokenize + vote pipeline), split into chunks, cap hot
+    chunks, self-join per (blk, chunk), verify on full-signature
+    ``bit_count(xor)``, dedupe pairs that share several chunks."""
+    chunked = _chunked_signatures(_materialize(sigs, materialize), blocks, bits)
+    [chunked] = _cap_hot_keys([chunked], ["blk", "chunk"], max_chunk_df)
+    hamming = F.bit_count(F.col("A.simhash").bitwiseXOR(F.col("B.simhash")))
+    return (
+        _self_join(chunked, ["blk", "chunk"])
+        .select(
+            F.col("A.doc").alias("doc_a"),
+            F.col("B.doc").alias("doc_b"),
+            hamming.cast("int").alias("hamming"),
+        )
+        .filter(F.col("hamming") <= max_hamming)
+        .distinct()
+    )
+
+
 _SIMHASH_INDEX_META = "_simhash_index_meta.json"
 
 
@@ -1079,12 +1146,11 @@ def simhash_index_write(
 ) -> None:
     """Materialize the corpus's SimHash chunk index (``(doc, simhash,
     blk, chunk)``) as Parquet at ``path``, partitioned by ``blk`` —
-    the SimHash twin of :func:`minhash_index_write`: the corpus's
+    the SimHash analogue of :func:`minhash_index_write`: the corpus's
     tokenize→64-lane-vote pipeline runs exactly once here."""
-    chunked = _chunked_signatures(
-        simhash_signatures(df, text_col, id_col), blocks
-    )
-    chunked.write.mode("overwrite").partitionBy("blk").parquet(path)
+    simhash_chunk_rows(df, text_col, id_col, blocks).write.mode(
+        "overwrite"
+    ).partitionBy("blk").parquet(path)
     index_meta.write(
         df.sparkSession, path, _SIMHASH_INDEX_META, _simhash_meta(blocks)
     )
@@ -1104,7 +1170,7 @@ def simhash_index_append(
     _require_meta(
         df.sparkSession, path, _SIMHASH_INDEX_META, _simhash_meta(blocks)
     )
-    _chunked_signatures(simhash_signatures(df, text_col, id_col), blocks).write.mode(
+    simhash_chunk_rows(df, text_col, id_col, blocks).write.mode(
         "append"
     ).partitionBy("blk").parquet(path)
 
@@ -1135,68 +1201,22 @@ def simhash_probe_candidates(
     over (index ∪ batch), exactly the batch op's semantics — one extra
     aggregation pass over the index per probe when set. Doc ids must be
     disjoint from the index."""
-    if max_hamming >= blocks and not partial_recall:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
-            "block-permutation recall guarantee (a pair can differ in "
-            "every chunk); raise blocks past max_hamming or pass "
-            "partial_recall=True to accept the heuristic"
-        )
+    _require_pigeonhole(max_hamming, blocks, partial_recall)
     _require_meta(spark, index_path, _SIMHASH_INDEX_META, _simhash_meta(blocks))
-    new_rows = _materialize(
-        _chunked_signatures(simhash_signatures(new_df, text_col, id_col), blocks),
-        materialize,
-    )
-    idx = spark.read.parquet(index_path)
-    if index_filter is not None:
-        # e.g. the streaming twin's strictly-earlier-batches predicate
-        # (a directory-pruning partition filter) — see
-        # streaming/dedupe_stream.near_dedup_stream
-        idx = idx.filter(index_filter)
-    if max_chunk_df is not None:
-        hot = F.broadcast(
-            idx.select("blk", "chunk")
-            .unionByName(new_rows.select("blk", "chunk"))
-            .groupBy("blk", "chunk")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_chunk_df)
-            .drop("df")
+    return (
+        _probe_candidates(
+            spark, index_path,
+            simhash_chunk_rows(new_df, text_col, id_col, blocks),
+            ["blk", "chunk"], ["simhash"],
+            broadcast_new, index_filter, materialize, max_chunk_df,
         )
-        idx = idx.join(hot, ["blk", "chunk"], "left_anti")
-        new_rows = new_rows.join(hot, ["blk", "chunk"], "left_anti")
-    probe = F.broadcast(new_rows) if broadcast_new else new_rows.hint("merge")
-    hamming_x = F.bit_count(F.col("simhash").bitwiseXOR(F.col("sig_new")))
-    cross = (
-        idx.join(
-            probe.withColumnsRenamed({"doc": "doc_new", "simhash": "sig_new"}),
-            ["blk", "chunk"],
-        )
-        .filter(F.col("doc") != F.col("doc_new"))
-        .select(
-            F.least("doc", "doc_new").alias("doc_a"),
-            F.greatest("doc", "doc_new").alias("doc_b"),
-            hamming_x.alias("hamming"),
-        )
-    )
-    a = new_rows.select(
-        F.col("doc").alias("doc_a"), F.col("simhash").alias("sig_a"), "blk", "chunk"
-    )
-    b = new_rows.select(
-        F.col("doc").alias("doc_b"), F.col("simhash").alias("sig_b"), "blk", "chunk"
-    )
-    if not broadcast_new:
-        a = a.hint("merge")
-    within = (
-        a.join(b, ["blk", "chunk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
         .select(
             "doc_a",
             "doc_b",
-            F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))).alias("hamming"),
+            F.bit_count(F.col("simhash").bitwiseXOR(F.col("simhash_2"))).alias(
+                "hamming"
+            ),
         )
-    )
-    return (
-        cross.unionByName(within)
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -1238,24 +1258,11 @@ def simhash_near_duplicates(
     bucket is the job. A pair is lost only if ALL its shared chunks are
     hot, i.e. both docs sit entirely inside degenerate clusters; the
     default (None) keeps exact candidate semantics."""
-    if max_hamming >= blocks and not partial_recall:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
-            "block-permutation recall guarantee (a pair can differ in "
-            "every chunk); raise blocks past max_hamming or pass "
-            "partial_recall=True to accept the heuristic"
-        )
-    sigs = _materialize(simhash_signatures(df, text_col, id_col), materialize)
-    chunked = _chunked_signatures(sigs, blocks)
-    if max_chunk_df is not None:
-        hot = (
-            chunked.groupBy("blk", "chunk")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_chunk_df)
-            .drop("df")
-        )
-        chunked = chunked.join(hot, ["blk", "chunk"], "left_anti")
-    return _hamming_pairs(chunked, max_hamming)
+    _require_pigeonhole(max_hamming, blocks, partial_recall)
+    return _simhash_pairs(
+        simhash_signatures(df, text_col, id_col),
+        64, blocks, max_hamming, max_chunk_df, materialize,
+    )
 
 
 def simhash_near_duplicates_md5(
@@ -1268,41 +1275,24 @@ def simhash_near_duplicates_md5(
     partial_recall: bool = False,
     materialize: str = "local",
 ) -> DataFrame:
-    """Portable-hash twin of :func:`simhash_near_duplicates` — the
-    SimHash analogue of :func:`minhash_lsh_candidates_md5` (r13 VERDICT
-    task 4): the SAME tokenize → per-bit majority vote → block-
-    permutation candidate join → Hamming verify pipeline, with token
-    bits drawn from md5 (a hash family every SQL engine ships) instead
-    of xxhash64: ONE md5 per token, bit ``b`` = 1 iff hex char ``b+1``
-    of ``md5(token)`` is >= '8' (the top bit of each nibble — 32 fair,
-    independent coins from one hash; computing md5 once per token in a
-    projection instead of per (token, lane) was a measured 32x hash-
-    cost cut). Majority is the same strict ``2·n_set > n`` vote;
-    signatures are ``bits``-wide integers split into ``blocks`` chunks
-    for the pigeonhole join; pairs verify on full-signature Hamming
-    distance.
+    """:func:`simhash_near_duplicates` with token bits drawn from md5,
+    a hash family every SQL engine ships, so the registry's DuckDB
+    oracle replays it exactly: ONE md5 per token, bit ``b`` = 1 iff hex
+    char ``b+1`` of ``md5(token)`` is >= '8' (the top bit of each
+    nibble — 32 fair, independent coins from one hash), so signatures
+    are at most 32 bits wide, and ``blocks`` must divide ``bits``. No
+    hot-chunk cap. Production keeps xxhash64: one 64-bit hash per token
+    beats ``bits`` md5 bits, and 64-bit signatures discriminate better.
 
-    Exists so the SimHash family has an exactly-replayable SQL oracle
-    face; PRODUCTION keeps the xxhash64 pipeline
-    (:func:`simhash_near_duplicates` — one 64-bit hash per token beats
-    ``bits`` md5 calls per token, and 64-bit signatures discriminate
-    better). Same scale shape: one groupBy(doc) shuffle for the vote,
-    candidate cost Σ chunk_df² over chunk groups — which is why the
-    default is 32 bits / 8-bit chunks, NOT 16/4: 4-bit chunks have
+    The default is 32 bits / 8-bit chunks, NOT 16/4: 4-bit chunks have
     only 16 distinct values per block, so every block's join collapses
     into 16 O(n²/16) buckets (measured: 22.7k mostly-noise pairs at
     sf0.01; random 16-bit signatures land within Hamming 3 of each
     other ~1% of the time).
 
     Output: (doc_a, doc_b, hamming), distinct."""
-    if bits % blocks:
-        raise ValueError(f"blocks={blocks} must divide bits={bits}")
-    if max_hamming >= blocks and not partial_recall:
-        raise ValueError(
-            f"max_hamming={max_hamming} >= blocks={blocks} voids the "
-            "block-permutation recall guarantee; raise blocks or pass "
-            "partial_recall=True"
-        )
+    _require_divisible(bits, "bits", blocks, "blocks")
+    _require_pigeonhole(max_hamming, blocks, partial_recall)
     if bits > 32:
         raise ValueError(
             f"bits={bits} > 32: one md5 yields 32 hex chars, one "
@@ -1317,10 +1307,7 @@ def simhash_near_duplicates_md5(
     # comparison — hex char b+1 of md5(w) is ≥ '8' exactly when the top
     # bit of its nibble is set, so each 8-hex-char block is parsed ONCE
     # with conv() into a 32-bit integer and every lane reads its bit
-    # with shiftright/& (guide §1.2 per-task work: 32 interpreted
-    # substring+string-compare evaluations per token became
-    # ceil(bits/8) convs + 32 codegen'd shift-ands; identical bits by
-    # construction)
+    # with shiftright/& (identical bits by construction)
     n_segs = (bits + 7) // 8
     tokens = df.select(
         F.col(id_col).alias("doc"),
@@ -1335,21 +1322,14 @@ def simhash_near_duplicates_md5(
         ],
     )
     # one expr call for all lanes + reassembly (same r16 py4j cut as
-    # simhash_signatures); count(1) dedupes in the aggregate, the lane
-    # sums and the disjoint power-of-two terms are unchanged
+    # simhash_signatures)
     sig_sql = " + ".join(
         f"(CASE WHEN 2 * sum(shiftright(m{b // 8}, {31 - 4 * (b % 8)}) & 1) "
         f"> count(1) THEN {1 << b}L ELSE 0L END)"
         for b in range(bits)
     )
     sigs = tokens.groupBy("doc").agg(F.expr(sig_sql).alias("simhash"))
-    # materialize before the self-join (same reason as the xxhash64
-    # twin): both join branches would otherwise re-run the tokenize +
-    # md5 + {bits}-lane vote pipeline (r14 review find)
-    sigs = _materialize(sigs, materialize)
-    return _hamming_pairs(
-        _chunked_signatures(sigs, blocks, bits), max_hamming
-    )
+    return _simhash_pairs(sigs, bits, blocks, max_hamming, None, materialize)
 
 
 def _components_star(

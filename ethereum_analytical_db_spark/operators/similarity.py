@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import index_meta
+from .dedup import _cap_hot_keys
 from .materialize import materialize as _materialize
 
 DEC = "decimal(12,6)"
@@ -296,6 +297,52 @@ def _gemm_pair_score(pdf, i: int, j: int, thr: float):
     return np.minimum(la, rb), np.maximum(la, rb), sims[ai, bj]
 
 
+def _require_positive(**params: int) -> None:
+    """Reject a block/table count below 1 by name, before it reaches
+    the plan (0 blocks builds an empty pair-key array that fails deep in
+    analysis; 0 tables has no hyperplane set)."""
+    for name, value in params.items():
+        if value < 1:
+            raise ValueError(f"{name}={value} must be >= 1")
+
+
+def _exact_cosine_verify(
+    cands: DataFrame, vecs: DataFrame, threshold: float, materialize: str
+) -> DataFrame:
+    """The exact DECIMAL verify of the embedding near-dup faces:
+    candidate pairs ``(id_a, id_b)`` → ``(id_a, id_b, cosine)`` with
+    cosine ≥ ``threshold``, scored by exact fixed-point folds over the
+    ``(vid, dv)`` DECIMAL vectors (order-independent → bit-identical in
+    a SQL oracle). Only vectors that appear in a candidate pair are
+    normed — the fold is interpreted (not codegen), so restricting it to
+    the near-dup subset is the difference between O(candidates·d) and
+    O(n·d). Candidates and the member vectors are materialized once
+    (lazily): each feeds two join branches."""
+    cands = _materialize(cands, materialize, eager=False)
+    member_ids = (
+        cands.select(F.col("id_a").alias("vid"))
+        .unionAll(cands.select(F.col("id_b").alias("vid")))
+        .distinct()
+    )
+    base = _materialize(
+        vecs.join(member_ids, "vid", "left_semi").withColumn(
+            "n2", _dec_dot(F.col("dv"), F.col("dv")).cast("double")
+        ),
+        materialize,
+        eager=False,
+    )
+    a = base.select(F.col("vid").alias("id_a"), F.col("dv").alias("dva"), F.col("n2").alias("n2_a"))
+    b = base.select(F.col("vid").alias("id_b"), F.col("dv").alias("dvb"), F.col("n2").alias("n2_b"))
+    dot = _dec_dot(F.col("dva"), F.col("dvb")).cast("double")
+    cos = dot / F.sqrt(F.col("n2_a") * F.col("n2_b"))
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .select("id_a", "id_b", cos.alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
 def embedding_near_dup_exact(
     embeddings: DataFrame,
     threshold: float = 0.99,
@@ -327,6 +374,7 @@ def embedding_near_dup_exact(
     """
     import pandas as pd
 
+    _require_positive(blocks=blocks)
     thr = threshold - 1e-6
     src = embeddings.select(
         F.col(id_col).alias("vid"),
@@ -343,45 +391,13 @@ def embedding_near_dup_exact(
         ia, ib, _ = _gemm_pair_score(pdf, int(key[0]), int(key[1]), thr)
         return pd.DataFrame({"id_a": ia, "id_b": ib})
 
-    cands = _materialize(
-        repl.groupBy("i", "j").applyInPandas(
-            gemm_block_pair, schema="id_a long, id_b long"
-        ),
-        materialize,
-        eager=False,
+    cands = repl.groupBy("i", "j").applyInPandas(
+        gemm_block_pair, schema="id_a long, id_b long"
     )
-
-    # exact DECIMAL verification only for vectors that appear in a
-    # candidate pair — the fixed-point fold is interpreted (not codegen),
-    # so restricting it to the near-dup subset instead of the whole
-    # corpus is the difference between O(candidates·d) and O(n·d)
-    member_ids = (
-        cands.select(F.col("id_a").alias("vid"))
-        .unionAll(cands.select(F.col("id_b").alias("vid")))
-        .distinct()
+    vecs = embeddings.select(
+        F.col(id_col).alias("vid"), _as_dec_vec(F.col(vec_col)).alias("dv")
     )
-    # materialized once (lazily): the a/b join branches below would
-    # otherwise each re-run the scan + decimal cast + semi-join + n2
-    # fold (r16; same pattern as the signature materializations)
-    base = _materialize(
-        embeddings.select(
-            F.col(id_col).alias("vid"), _as_dec_vec(F.col(vec_col)).alias("dv")
-        )
-        .join(member_ids, "vid", "left_semi")
-        .withColumn("n2", _dec_dot(F.col("dv"), F.col("dv")).cast("double")),
-        materialize,
-        eager=False,
-    )
-    a = base.select(F.col("vid").alias("id_a"), F.col("dv").alias("dva"), F.col("n2").alias("n2_a"))
-    b = base.select(F.col("vid").alias("id_b"), F.col("dv").alias("dvb"), F.col("n2").alias("n2_b"))
-    dot = _dec_dot(F.col("dva"), F.col("dvb")).cast("double")
-    cos = dot / F.sqrt(F.col("n2_a") * F.col("n2_b"))
-    return (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return _exact_cosine_verify(cands, vecs, threshold, materialize)
 
 
 def lsh_params(
@@ -450,59 +466,45 @@ def embedding_near_dup_lsh_md5(
     materialize: str = "local",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
-    """The LSH family's hash-checked face (COVERAGE fold #6): the exact
-    hyperplane-bucket → within-bucket pair → exact-cosine pipeline of
-    :func:`embedding_near_dup_lsh`, keyed by :func:`md5_plane_ints`
-    planes and DECIMAL dot products so a DuckDB oracle replays it
-    verbatim — sign bits, bucket strings, candidate set and cosines all
-    bit-identical. Production stays on the numpy-gemm twin (random
-    Gaussian planes, applyInPandas BLAS scoring, multi-table recall
-    sizing); this face pins the family's CANDIDATE SEMANTICS — sign-bit
-    bucketing and within-bucket exact verify — the same way
-    ``simhash_near_duplicates_md5`` pins SimHash's.
+    """:func:`embedding_near_dup_lsh` with planes a DuckDB oracle can
+    regenerate: one table of :func:`md5_plane_ints` INTEGER hyperplanes
+    dotted against DECIMAL(12,6) vectors, so every sign bit — and so
+    every bucket string, candidate pair and exact cosine — is
+    bit-identical across engines. Pairs are scored with JVM expressions
+    instead of a numpy gemm and verified by the exact DECIMAL fold
+    :func:`embedding_near_dup_exact` uses. Production stays on the gemm
+    face (Gaussian planes, BLAS scoring, multi-table recall sizing).
 
-    Plan shape mirrors production where it matters at scale: one
-    projection computes the bucket (pure JVM expression — built as ONE
-    SQL string, not a 512-literal py4j Column chain, the r14
-    construction-latency lesson), one shuffle co-locates each bucket,
-    pairs are scored within buckets only.
-
-    r16 optimization — same OUTPUT bits, far less interpreted decimal
-    arithmetic (guide §1.2 "per-task work" + the §8 verify-less rule):
+    Plan: one projection computes the bucket (ONE SQL string, not a
+    512-literal py4j Column chain — the r14 construction-latency
+    lesson) and is materialized once (``materialize=``: local |
+    reliable) so the self-join branches don't recompute the plane dots;
+    one shuffle co-locates each bucket; pairs are scored within buckets
+    only. r16 — same OUTPUT bits, far less interpreted decimal work:
 
     - the sign bits are computed in exact LONG arithmetic: a
       DECIMAL(12,6) component times 1e6 is an exact integer, so
       sign(Σ c·v) over integer plane components equals the decimal
-      fold's sign bit-for-bit, with 64-bit multiplies instead of
-      interpreted BigDecimal ops (bounded: |c| ≤ 128, |v·1e6| < 1e12,
+      fold's sign bit-for-bit (bounded: |c| ≤ 128, |v·1e6| < 1e12,
       64 terms → |Σ| < 8.2e15 ≪ 2^63, no overflow);
     - same-bucket pairs are PRE-FILTERED with a double-precision
       cosine at ``threshold − 1e-6``: a 64-term double dot of
       decimal(12,6)-quantized values carries ≤ ~1e-13 relative
       round-off, so no pair whose exact decimal cosine reaches the
-      threshold can be dropped (the identical margin argument
-      ``embedding_near_dup_exact`` already relies on);
-    - the exact DECIMAL fold — the face's reason to exist — runs only
-      on the handful of surviving candidates (O(near-dups), not
-      O(Σ bucket²)), so the reported cosines stay bit-identical to the
-      all-decimal form and to the DuckDB oracle.
-
-    The signature/bucket projection is materialized once
-    (``materialize=``: local | reliable, operators/materialize.py) so
-    the self-join branches don't recompute the plane dots — the same
-    pattern the SimHash faces use.
+      threshold can be dropped (the margin argument
+      ``embedding_near_dup_exact`` relies on);
+    - the exact DECIMAL verify runs only on the surviving candidates.
 
     ``max_bucket_size`` (r17): optional hot-bucket cap — drop every row
-    whose bucket holds more than this many vectors BEFORE the self-join.
-    Pair generation is O(bucket²): with 2^planes buckets, one degenerate
-    bucket (near-constant embedding field, skewed corpus) IS the job at
-    scale, the same hazard MinHash bounds with ``max_bucket_df``
-    (operators/dedup.py) and the production gemm twin with
-    ``sub_blocks``. Dropping a hot bucket loses ALL its pairs — a
-    single-table LSH has no second band to recover them through — so
-    this is an explicit recall trade for boundedness; the default
-    (None) keeps exact single-table LSH candidate semantics (and the
-    registry face's oracle contract)."""
+    whose bucket holds more than this many vectors BEFORE the self-join
+    (the shared ``dedup._cap_hot_keys``). Pair generation is
+    O(bucket²): with 2^planes buckets, one degenerate bucket IS the job
+    at scale — the hazard MinHash bounds with ``max_bucket_df`` and the
+    gemm face with ``sub_blocks``. Dropping a hot bucket loses ALL its
+    pairs — a single-table LSH has no second band to recover them
+    through — so this is an explicit recall trade for boundedness; the
+    default (None) keeps exact single-table LSH candidate semantics
+    (and the registry face's oracle contract)."""
     mat = md5_plane_ints(planes, dim, salt)
     src = embeddings.select(
         F.col(id_col).alias("vid"), _as_dec_vec(F.col(vec_col)).alias("dv")
@@ -536,21 +538,14 @@ def embedding_near_dup_lsh_md5(
         materialize,
         eager=False,
     )
-    if max_bucket_size is not None:
-        hot = (
-            base.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter(F.col("n") > max_bucket_size)
-            .drop("n")
-        )
-        base = base.join(hot, "bucket", "left_anti")
-    a = base.select(
+    [capped] = _cap_hot_keys([base], ["bucket"], max_bucket_size)
+    a = capped.select(
         F.col("vid").alias("id_a"),
         F.col("fv").alias("fva"),
         F.col("fn2").alias("fn2_a"),
         "bucket",
     )
-    b = base.select(
+    b = capped.select(
         F.col("vid").alias("id_b"),
         F.col("fv").alias("fvb"),
         F.col("fn2").alias("fn2_b"),
@@ -565,29 +560,10 @@ def embedding_near_dup_lsh_md5(
         .filter(approx_cos >= F.lit(threshold - 1e-6))
         .select("id_a", "id_b")
     )
-    # exact DECIMAL verify on the survivors only — identical values to
-    # the previous all-decimal pipeline (the double pre-filter cannot
-    # drop a true pair, and extra borderline candidates are re-filtered
-    # by the exact cosine below)
-    dec = base.select(
-        "vid", "dv", _dec_dot(F.col("dv"), F.col("dv")).cast("double").alias("n2")
-    )
-    va = dec.select(
-        F.col("vid").alias("id_a"), F.col("dv").alias("dva"),
-        F.col("n2").alias("n2_a"),
-    )
-    vb = dec.select(
-        F.col("vid").alias("id_b"), F.col("dv").alias("dvb"),
-        F.col("n2").alias("n2_b"),
-    )
-    cos = _dec_dot(F.col("dva"), F.col("dvb")).cast("double") / F.sqrt(
-        F.col("n2_a") * F.col("n2_b")
-    )
-    return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .select("id_a", "id_b", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+    # the double pre-filter cannot drop a true pair, and extra
+    # borderline candidates are re-filtered by the exact cosine
+    return _exact_cosine_verify(
+        cands, base.select("vid", "dv"), threshold, materialize
     )
 
 
@@ -613,9 +589,9 @@ def embedding_near_dup_lsh(
     production monitoring) can assert the hottest task stayed bounded.
 
     Shape: one Arrow pass assigns buckets (sign-bit pattern of the
-    plane gemm), one shuffle
-    groups each bucket onto a task, one numpy gemm per bucket scores its
-    pairs (BLAS flops, not an interpreted per-pair fold — the previous
+    plane gemm), one shuffle groups each bucket (sub-block pair, below)
+    onto a task, one numpy gemm per task scores its pairs through
+    ``_gemm_pair_score`` (BLAS flops, not an interpreted per-pair fold — the previous
     zip_with verify was 10× slower and dominated the suite). Shuffle is
     O(n) rows; flops Σ bucket². At 100 TB: write the table partitioned
     by bucket and this becomes a per-partition local operation.
@@ -625,7 +601,8 @@ def embedding_near_dup_lsh(
     AQE-split. Setting ``sub_blocks=S`` decomposes every bucket into the
     S·(S+1)/2 unordered sub-block pairs of the exact operator's scheme,
     bounding task memory at ~2·bucket/S vectors for an S× replication of
-    the shuffle. Identical output for any value (unit-tested).
+    the shuffle; the default S=1 is one (0, 0) task per bucket.
+    Identical output for any value (unit-tested).
 
     ``tables``: multi-table LSH — L independent hyperplane sets (seeds
     seed..seed+L-1), candidates unioned, pairs deduped. Recall becomes
@@ -635,52 +612,24 @@ def embedding_near_dup_lsh(
     10x data at fixed planes=4) without recall collapsing. Cost is a
     ~L× shuffle/flops multiplier; at 100 TB you size planes ≈
     log2(n/target_bucket) first, then buy recall with tables."""
-    import numpy as np
     import pandas as pd
 
+    _require_positive(sub_blocks=sub_blocks, tables=tables)
     thr = threshold - 1e-6
     src = embeddings.select(F.col(id_col).alias("vid"), F.col(vec_col).alias("v"))
     per_table = [
         _assign_sign_buckets(
             src, _plane_matrix(dim, planes, seed + t), "vid", "v"
         ).withColumn("tbl", F.lit(t))
-        for t in range(max(tables, 1))
+        for t in range(tables)
     ]
     withb = per_table[0]
     for more in per_table[1:]:
         withb = withb.unionByName(more)
 
-    def _dedup_pairs(pairs_df: DataFrame) -> DataFrame:
-        if tables <= 1:
-            return pairs_df  # single table emits each pair once already
-        # identical float64 pipeline per table → identical cosine bits;
-        # max() is just the deterministic way to keep one
-        return pairs_df.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
-
-    if sub_blocks <= 1:
-
-        def gemm_bucket(key, pdf):
-            if group_size_acc is not None:
-                group_size_acc.add(len(pdf))
-            mat = np.asarray([np.asarray(x, dtype=np.float64) for x in pdf["v"]])
-            unit = mat / np.sqrt((mat * mat).sum(axis=1))[:, None]
-            sims = unit @ unit.T
-            ai, bj = np.nonzero(sims >= thr)
-            ids = pdf["vid"].to_numpy()
-            ia, ib = ids[ai], ids[bj]
-            keep = ia < ib
-            return pd.DataFrame(
-                {"id_a": ia[keep], "id_b": ib[keep], "cosine": sims[ai, bj][keep]}
-            )
-
-        return _dedup_pairs(
-            withb.groupBy("tbl", "bucket")
-            .applyInPandas(gemm_bucket, schema="id_a long, id_b long, cosine double")
-            .filter(F.col("cosine") >= threshold)
-        )
-
-    # hot-bucket decomposition: replicate each row to every unordered
-    # sub-block pair it participates in; each (bucket, i, j) is one task
+    # replicate each row to every unordered sub-block pair it
+    # participates in; each (tbl, bucket, i, j) is one task (at
+    # sub_blocks=1 that is one (0, 0) task per bucket)
     src = withb.withColumn(
         "blk",
         F.pmod(F.xxhash64(F.col("vid").cast("string")), F.lit(sub_blocks)).cast("int"),
@@ -701,11 +650,16 @@ def embedding_near_dup_lsh(
         ia, ib, cs = _gemm_pair_score(pdf, int(key[2]), int(key[3]), thr)
         return pd.DataFrame({"id_a": ia, "id_b": ib, "cosine": cs})
 
-    return _dedup_pairs(
+    pairs = (
         repl.groupBy("tbl", "bucket", "i", "j")
         .applyInPandas(gemm_bucket_pair, schema="id_a long, id_b long, cosine double")
         .filter(F.col("cosine") >= threshold)
     )
+    if tables == 1:
+        return pairs  # a single table emits each pair once already
+    # identical float64 pipeline per table → identical cosine bits;
+    # max() is just the deterministic way to keep one
+    return pairs.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
 
 
 def quantize_embeddings(

@@ -253,9 +253,7 @@ def near_dedup_stream(
             )
 
         def index_rows(batch_df):
-            return d._chunked_signatures(
-                d.simhash_signatures(batch_df, text_col, id_col), blocks
-            )
+            return d.simhash_chunk_rows(batch_df, text_col, id_col, blocks)
 
         def write_meta(spark):
             d._ensure_meta(

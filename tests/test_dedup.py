@@ -158,6 +158,30 @@ def test_simhash_md5_twin_duckdb_parity(spark):
     assert got == want and len(got) > 0
 
 
+def test_minhash_md5_twin_duckdb_parity(spark):
+    """The MinHash family's hash-checked registry entry, checked the
+    same way as the SimHash one: the registry's oracle SQL in DuckDB on
+    the sf0.001 documents table returns the same (doc_a, doc_b,
+    bands_in_common) rows as the Spark pipeline."""
+    import duckdb
+    from __spark_entry__ import SF0001 as sf
+
+    from ethereum_analytical_db_spark.plans.registry import all_queries
+
+    qdef = all_queries()["minhash_lsh_candidates_md5"]
+    assert qdef.oracle is not None and "md5" in qdef.oracle
+    got = sorted(
+        (r["doc_a"], r["doc_b"], r["bands_in_common"])
+        for r in qdef.build(spark, sf).collect()
+    )
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM '{sf}/documents.parquet'"
+    )
+    want = sorted(tuple(r) for r in con.execute(qdef.oracle).fetchall())
+    assert got == want and len(got) > 0
+
+
 def test_simhash_near_identical_docs_close(spark):
     df, planted = _corpus(spark)
     pairs = {

@@ -753,3 +753,21 @@ def test_embedding_near_dup_lsh_md5_duckdb_parity(spark):
     )
     want = sorted(tuple(r) for r in con.execute(qdef.oracle).fetchall())
     assert got == want and len(got) > 0
+
+
+def test_block_and_table_counts_below_one_rejected_by_name(spark):
+    """``blocks``, ``sub_blocks`` and ``tables`` below 1 raise a
+    ``ValueError`` naming the parameter at call time, instead of an
+    analysis error on an empty pair-key array (blocks=0) or a silent
+    clamp to one table (tables=0)."""
+    import pytest
+
+    rows, _ = _mk_vectors()
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    with pytest.raises(ValueError, match="blocks=0"):
+        similarity.embedding_near_dup_exact(df, blocks=0)
+    for bad in (0, -2):
+        with pytest.raises(ValueError, match=f"sub_blocks={bad}"):
+            similarity.embedding_near_dup_lsh(df, dim=16, sub_blocks=bad)
+    with pytest.raises(ValueError, match="tables=0"):
+        similarity.embedding_near_dup_lsh(df, dim=16, tables=0)
