@@ -8,13 +8,21 @@ fee + fee_reward, floored at 0
 (examples/balances_api/actions/balances.py:68-83,
 token_balances.py:26-35).
 
-Here the combine is a chain of full-outer joins + coalesce arithmetic
-executed by Spark SQL over the warehouse's registered views (the
-analytics read path, SURVEY §3.3) — the engine does the distributed
-work; Flask only shapes JSON. Balance semantics follow
-examples/sql_balances/balances.sql:1-63: fees count only top-level
-calls (id LIKE '%.0'), rewards only type='reward', and a miner earns
-each block's total fees (fee_reward).
+Here the combine is one Spark SQL aggregate over the warehouse's
+registered views (the analytics read path, SURVEY §3.3) — the engine
+does the distributed work; Flask only shapes JSON. Balance semantics
+follow examples/sql_balances/balances.sql:1-63: fees count only
+top-level calls (id LIKE '%.0'), rewards only type='reward', and a
+miner earns each block's total fees (fee_reward).
+
+Each query reads its view once. A window over the block adds every
+row's block fee total, ``stack`` emits one leg per address a row
+touches (``to``: income; ``from``: outcome and fee; ``author``: reward
+and fee_reward), and one GROUP BY address sums the legs. Under the
+FINAL view every further reference to the view would rerun the whole
+last-write-wins window, so the five terms are never built as separate
+aggregates joined back together (SCALE.md: 4 Spark jobs per
+FINAL-window request).
 """
 
 from __future__ import annotations
@@ -22,70 +30,48 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 BALANCES_SQL = """
-WITH universe AS (
-  SELECT DISTINCT address FROM (
-    SELECT `to` AS address FROM internal_transaction
-    UNION ALL SELECT `from` AS address FROM internal_transaction
-    UNION ALL SELECT author AS address FROM internal_transaction
-  ) WHERE address IS NOT NULL
+WITH itx AS (
+  SELECT *,
+         SUM(CASE WHEN id LIKE '%.0' THEN gasUsed * gasPrice END)
+           OVER (PARTITION BY blockNumber) AS block_fee,
+         error IS NULL
+           AND (parent_error IS NULL OR CAST(parent_error AS INT) = 0) AS succeeded
+  FROM internal_transaction
 ),
-income AS (
-  SELECT `to` AS address, SUM(value) AS v FROM internal_transaction
-  WHERE type != 'reward' AND error IS NULL
-    AND (parent_error IS NULL OR CAST(parent_error AS INT) = 0)
-  GROUP BY `to`
-),
-outcome AS (
-  SELECT `from` AS address, SUM(value) AS v FROM internal_transaction
-  WHERE error IS NULL
-    AND (parent_error IS NULL OR CAST(parent_error AS INT) = 0)
-  GROUP BY `from`
-),
-reward AS (
-  SELECT author AS address, SUM(value) AS v FROM internal_transaction
-  WHERE type = 'reward' GROUP BY author
-),
-fee AS (
-  SELECT `from` AS address, SUM(gasUsed * gasPrice) AS v
-  FROM internal_transaction WHERE id LIKE '%.0' GROUP BY `from`
-),
-block_fee AS (
-  SELECT blockNumber, SUM(gasUsed * gasPrice) AS v
-  FROM internal_transaction WHERE id LIKE '%.0' GROUP BY blockNumber
-),
-fee_reward AS (
-  SELECT m.author AS address, SUM(bf.v) AS v
-  FROM (SELECT author, blockNumber FROM internal_transaction
-        WHERE type = 'reward' AND rewardType = 'block') m
-  JOIN block_fee bf USING (blockNumber)
-  GROUP BY m.author
+legs AS (
+  SELECT stack(3,
+    `to`, CASE WHEN type != 'reward' AND succeeded THEN value END,
+          NULL, NULL, NULL, NULL,
+    `from`, NULL, CASE WHEN succeeded THEN value END,
+            CASE WHEN id LIKE '%.0' THEN gasUsed * gasPrice END, NULL, NULL,
+    -- a block without a top-level call has a NULL block_fee: no fee_reward
+    author, NULL, NULL, NULL, CASE WHEN type = 'reward' THEN value END,
+            CASE WHEN type = 'reward' AND rewardType = 'block' THEN block_fee END
+  ) AS (address, income, outcome, fee, reward, fee_reward)
+  FROM itx
 )
-SELECT u.address,
+SELECT address,
        GREATEST(
-         COALESCE(i.v, 0) - COALESCE(o.v, 0) + COALESCE(r.v, 0)
-         - COALESCE(f.v, 0) + COALESCE(fr.v, 0),
+         COALESCE(SUM(income), 0) - COALESCE(SUM(outcome), 0)
+         + COALESCE(SUM(reward), 0) - COALESCE(SUM(fee), 0)
+         + COALESCE(SUM(fee_reward), 0),
          0
        ) AS balance
-FROM universe u
-LEFT JOIN income i ON u.address = i.address
-LEFT JOIN outcome o ON u.address = o.address
-LEFT JOIN reward r ON u.address = r.address
-LEFT JOIN fee f ON u.address = f.address
-LEFT JOIN fee_reward fr ON u.address = fr.address
+FROM legs
+WHERE address IS NOT NULL
+GROUP BY address
 """
 
+# one signed leg per side of a transfer; NULL addresses are grouped per
+# side, so a NULL `from` and a NULL `to` stay two separate rows
 TOKEN_BALANCES_SQL = """
-SELECT COALESCE(o.token, i.token) AS token,
-       COALESCE(o.address, i.address) AS address,
-       COALESCE(i.v, 0) - COALESCE(o.v, 0) AS balance
+SELECT token, address, COALESCE(SUM(v), 0) AS balance
 FROM (
-  SELECT token, `from` AS address, SUM(value) AS v
-  FROM token_transaction GROUP BY token, `from`
-) o
-FULL OUTER JOIN (
-  SELECT token, `to` AS address, SUM(value) AS v
-  FROM token_transaction GROUP BY token, `to`
-) i ON o.token = i.token AND o.address = i.address
+  SELECT token, stack(2, `to`, 'to', value, `from`, 'from', -value)
+           AS (address, side, v)
+  FROM token_transaction
+)
+GROUP BY token, address, CASE WHEN address IS NULL THEN side END
 """
 
 
@@ -117,12 +103,14 @@ def create_app(spark: SparkSession):
     def balances():
         payload = request.get_json(silent=True)
         # accept both body shapes: {"addresses": [...]} and a bare JSON
-        # list (the reference clients post the latter) — .get on a list
-        # was a 500
-        if isinstance(payload, list):
-            addrs = payload
-        else:
-            addrs = (payload or {}).get("addresses")
+        # list (the reference clients post the latter); no body at all
+        # asks for every address
+        addrs = payload.get("addresses") if isinstance(payload, dict) else payload
+        if addrs is not None and not (
+            isinstance(addrs, list) and all(isinstance(a, str) for a in addrs)
+        ):
+            return jsonify(error="expected a JSON list of address strings "
+                                 'or {"addresses": [...]}'), 400
         rows = compute_balances(spark, addrs).collect()
         return jsonify({r["address"]: r["balance"] for r in rows})
 
